@@ -13,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from veloci_spark import bm25
 from veloci_spark.bm25 import (
     bm25_prf_topk,
     B,
@@ -136,7 +137,8 @@ def test_topk_sums_terms(bm25_index):
 
 @pytest.mark.parametrize("terms", [["alpha"], ["alpha", "gamma"], ["beta", "delta", "epsilon"]])
 @pytest.mark.parametrize("k", [2, 5])
-def test_wand_rank_identical(bm25_index, terms, k):
+def test_wand_rank_identical(bm25_index, monkeypatch, terms, k):
+    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)  # run the loop
     exact = bm25_topk(bm25_index, "body", terms, k).collect()
     wand = bm25_wand_topk(
         bm25_index, "body", terms, k, start_blocks=1, max_iters=8
@@ -174,31 +176,21 @@ def test_and_wand_rank_identical(bm25_index, terms):
     assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
-def test_wand_prunes_on_skewed_blocks(bm25_index):
+def test_wand_prunes_on_skewed_blocks(bm25_index, monkeypatch):
     # "alpha" is block-skewed in CORPUS (tf=3 in block 0, tf<=2 elsewhere):
     # with k=1 the first decoded block's exact score strictly beats every
     # remaining block-max, so WAND must stop after ONE block of three
     stats: dict = {}
-    # small_postings=0 forces the pruning loop (the small-volume
-    # short-circuit would otherwise full-decode this tiny fixture)
+    # the small-volume short-circuit would otherwise full-decode this
+    # tiny fixture
+    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)
     rows = bm25_wand_topk(
-        bm25_index, "body", ["alpha"], 1, start_blocks=1, stats=stats,
-        small_postings=0,
+        bm25_index, "body", ["alpha"], 1, start_blocks=1, stats=stats
     ).collect()
     exact = bm25_topk(bm25_index, "body", ["alpha"], 1).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in exact]
     assert stats["blocks_total"] == 3
     assert stats["blocks_decoded"] == 1  # pruned, not full decode
-
-
-def test_wand_budget_exhaustion_falls_back_to_full(bm25_index):
-    # max_iters=1 with 1 starting block cannot converge on 3 blocks →
-    # must fall back to the full decode, not return a truncated set
-    exact = bm25_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
-    wand = bm25_wand_topk(
-        bm25_index, "body", ["alpha", "gamma"], 5, start_blocks=1, max_iters=1
-    ).collect()
-    assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
 def test_auto_dispatch_picks_exhaustive_below_threshold(bm25_index):
@@ -239,18 +231,6 @@ def test_auto_dispatch_env_override(bm25_index, monkeypatch):
     stats: dict = {}
     bm25_auto_topk(bm25_index, "body", ["alpha"], 2, stats=stats).collect()
     assert stats["dispatch"] == "wand"
-
-
-def test_certificate_jump_converges_in_two_decodes(bm25_index):
-    # the certificate jump guarantees iteration 2 stops: from 1 starting
-    # block on a 3-block index, max_iters=2 must now suffice (the former
-    # multiplicative growth needed the full-decode fallback here only
-    # when the certificate was capped)
-    exact = bm25_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
-    wand = bm25_wand_topk(
-        bm25_index, "body", ["alpha", "gamma"], 5, start_blocks=1, max_iters=2
-    ).collect()
-    assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
 def test_resume_skips_bm25_stage(spark, tmp_root, bm25_index):
@@ -387,19 +367,6 @@ def test_bm25f_single_field_weight1_equals_bm25(phrase_index):
     a = bm25f_topk(phrase_index, {"body": 1}, ["merge", "join"], 10).collect()
     b = bm25_topk(phrase_index, "body", ["merge", "join"], 10).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_bm25f_wand_rank_identical(phrase_index):
-    from veloci_spark.bm25 import bm25f_topk, bm25f_wand_topk
-
-    terms = ["merge", "py"]
-    weights = {"body": 1, "path": 3}
-    for k in (1, 3, 10):
-        exact = bm25f_topk(phrase_index, weights, terms, k).collect()
-        wand = bm25f_wand_topk(
-            phrase_index, weights, terms, k, start_blocks=1
-        ).collect()
-        assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
 def test_bm25f_auto_dispatch_both_arms(phrase_index):
@@ -589,6 +556,86 @@ def test_filtered_nothing_allowed_is_empty(bm25_index):
     assert bm25_filtered_wand_topk(
         bm25_index, "body", ["alpha"], 5, F.lit(False), start_blocks=1
     ).count() == 0
+
+
+# ------------------------------------------- block-max loop, every variant
+
+_LOOP_WEIGHTS = {"body": 1, "path": 3}
+_LOOP_FILTER = "doc_id % 3 != 1"
+
+
+def _loop_pair(variant, bm25_index, phrase_index):
+    """(exhaustive twin, block-max variant) as k, max_iters -> frame."""
+    from veloci_spark.bm25 import (
+        bm25_filtered_topk,
+        bm25_filtered_wand_topk,
+        bm25f_topk,
+        bm25f_wand_topk,
+    )
+
+    if variant == "or":
+        t = ["alpha", "gamma"]
+        return (
+            lambda k: bm25_topk(bm25_index, "body", t, k),
+            lambda k, it: bm25_wand_topk(
+                bm25_index, "body", t, k, start_blocks=1, max_iters=it
+            ),
+        )
+    if variant == "and":
+        t = ["alpha", "beta"]
+        return (
+            lambda k: bm25_and_topk(bm25_index, "body", t, k),
+            lambda k, it: bm25_and_wand_topk(
+                bm25_index, "body", t, k, start_blocks=1, max_iters=it
+            ),
+        )
+    if variant == "bm25f":
+        t = ["merge", "py"]
+        return (
+            lambda k: bm25f_topk(phrase_index, _LOOP_WEIGHTS, t, k),
+            lambda k, it: bm25f_wand_topk(
+                phrase_index, _LOOP_WEIGHTS, t, k, start_blocks=1, max_iters=it
+            ),
+        )
+    t = ["alpha", "beta", "gamma"]
+    return (
+        lambda k: bm25_filtered_topk(bm25_index, "body", t, k, _LOOP_FILTER),
+        lambda k, it: bm25_filtered_wand_topk(
+            bm25_index, "body", t, k, _LOOP_FILTER, start_blocks=1, max_iters=it
+        ),
+    )
+
+
+@pytest.mark.parametrize("max_iters", [1, 8])
+@pytest.mark.parametrize("k", [0, 1, 5])
+@pytest.mark.parametrize("variant", ["or", "and", "bm25f", "filtered"])
+def test_blockmax_loop_rank_identical(
+    bm25_index, phrase_index, monkeypatch, variant, k, max_iters
+):
+    """With the small-volume short-circuit off, every block-max variant
+    runs the pruning loop (max_iters=1 from one start block also forces
+    the full-decode fallback on these multi-block fixtures) and must
+    equal its exhaustive twin, k=0 included."""
+    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)
+    exact, pruned = _loop_pair(variant, bm25_index, phrase_index)
+    want = [tuple(r) for r in exact(k).collect()]
+    assert [tuple(r) for r in pruned(k, max_iters).collect()] == want
+
+
+def test_blockmax_releases_cache_when_decode_fails(spark, bm25_index, monkeypatch):
+    """A filter that fails only at execution aborts the loop's decode;
+    the blocks the loop cached must be released all the same."""
+    from veloci_spark.bm25 import bm25_filtered_wand_topk
+
+    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    with pytest.raises(Exception, match="boom"):
+        bm25_filtered_wand_topk(
+            bm25_index, "body", ["alpha", "gamma"], 3,
+            "raise_error('boom') IS NULL", start_blocks=1,
+        ).collect()
+    assert persisted().size() == before
 
 
 def test_filter_accepts_sql_string_and_pushes_down(bm25_index):

@@ -35,6 +35,12 @@ def legs(spark):
     return lex_rank, dense_rank
 
 
+def test_bm25_text_topk_without_terms_is_empty(spark):
+    lex = bm25_text_topk(spark, SF, terms=[])
+    assert lex.columns == ["doc_id", "bm25_e4"]
+    assert lex.collect() == []
+
+
 @pytest.fixture(scope="module")
 def fused(spark):
     return hybrid_rrf_topk(spark, SF, k=500).collect()

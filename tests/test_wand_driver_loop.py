@@ -8,7 +8,7 @@ so the edge cases stay cheap to exercise exhaustively.
 
 from __future__ import annotations
 
-from veloci_spark.wand import wand_driver_loop
+from veloci_spark.wand import blockmax_topk, wand_driver_loop
 
 
 def _ubs(*vals):
@@ -137,3 +137,31 @@ def test_budget_exhaustion_returns_none():
         rows, False, 50, exact, lambda r: r["score"], start_blocks=1, max_iters=2
     )
     assert res is None and decoded is None
+
+
+def test_blockmax_topk_k0_is_empty_without_a_job():
+    # k <= 0 must answer the empty frame before touching the bound frame
+    # or decoding anything (the loop would read rows[-1] of no rows)
+    made = []
+
+    class _Session:
+        def createDataFrame(self, rows, schema):
+            made.append((list(rows), schema))
+            return "empty"
+
+    class _Bounds:
+        sparkSession = _Session()
+
+        def __getattr__(self, name):
+            raise AssertionError(f"k=0 touched the bound frame: {name}")
+
+    def exact(cand_ids):
+        raise AssertionError("k=0 decoded")
+
+    for k in (0, -1):
+        out = blockmax_topk(
+            _Bounds(), exact, k, "doc_id long, score_e4 long",
+            lambda r: r["score_e4"],
+        )
+        assert out == "empty"
+    assert made == [([], "doc_id long, score_e4 long")] * 2

@@ -39,15 +39,12 @@ numpy-in-Arrow pass as native postings; no per-row Python anywhere.
 from __future__ import annotations
 
 import math
+from functools import reduce
 from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from veloci_spark.wand import (
-    candidate_block_filter,
-    collect_block_ubs,
-    wand_driver_loop,
-)
+from veloci_spark.wand import blockmax_topk, candidate_block_filter
 
 K1 = 1.2
 B = 0.75
@@ -203,7 +200,7 @@ def bm25_from_tf(tf: DataFrame) -> tuple[DataFrame, dict[str, dict]]:
     n_docs_total = sum(s["n_docs"] for s in stats.values())
     dl_side = doc_len
     df_side = df_counts
-    if n_docs_total <= _bm25_build_broadcast_docs():
+    if n_docs_total <= BM25_BUILD_BROADCAST_DOCS:
         dl_side = F.broadcast(doc_len)
         if df_counts.count() <= 4_000_000:
             df_side = F.broadcast(df_counts)
@@ -262,8 +259,134 @@ def _matched_term_ids(index, field: str, terms: Sequence[str]) -> list[int]:
     return [tid for tid, _ in _matched_term_meta(index, field, terms)]
 
 
+def _term_blocks(index, field: str, ids: list[int]) -> DataFrame:
+    """The field's bm25 blocks for ``ids``: the literal ``term_id IN``
+    reaches the Parquet scan's row-group stats."""
+    return index.bm25_blocks(field).where(F.col("term_id").isin(ids))
+
+
+def _field_parts(
+    index, field_weights: dict[str, int], terms: Sequence[str], meta_by_field=None
+) -> tuple[list, int]:
+    """``(parts, postings)`` for :func:`_scored`/:func:`_blockmax`: one
+    ``(weight, term-filtered blocks)`` pair per field with a dictionary
+    match, and the matched ``num_occurences`` total.  ``meta_by_field``
+    reuses a probe the caller already collected."""
+    if meta_by_field is None:
+        meta_by_field = {
+            f: _matched_term_meta(index, f, terms) for f in sorted(field_weights)
+        }
+    parts = [
+        (int(field_weights[f]), _term_blocks(index, f, [tid for tid, _ in m]))
+        for f, m in sorted(meta_by_field.items())
+        if m
+    ]
+    return parts, sum(occ for m in meta_by_field.values() for _, occ in m)
+
+
 def _empty_topk(spark) -> DataFrame:
     return spark.createDataFrame([], "doc_id long, score_e4 long")
+
+
+def _sum_per(df: DataFrame, key: str, col: str, out: str, require_all: int) -> DataFrame:
+    """Σ ``col`` per ``key`` as ``out``; ``require_all`` > 0 keeps only
+    keys with that many rows (one per matched term: the intersection)."""
+    if not require_all:
+        return df.groupBy(key).agg(F.sum(col).alias(out))
+    return (
+        df.groupBy(key)
+        .agg(F.sum(col).alias(out), F.count("*").alias("n"))
+        .where(F.col("n") == require_all)
+        .select(key, out)
+    )
+
+
+def _scored(
+    parts: Sequence[tuple[int, DataFrame]],
+    k: int,
+    require_all: int = 0,
+    allowed: Optional[DataFrame] = None,
+    cand_ids: Optional[list] = None,
+) -> DataFrame:
+    """The scored-postings plan behind every BM25 top-k: lazy
+    ``(doc_id, score_e4)``, the top ``k`` in (score desc, doc_id desc)
+    order.
+
+    ``parts`` holds one ``(weight, blocks)`` pair per field, ``blocks``
+    already term-filtered by a literal ``term_id IN``.  Each is cut to
+    the candidate blocks (``cand_ids``; None = all), decoded, and scaled
+    by its INTEGER weight, so a score stays an exact integer sum.
+    ``allowed`` (a doc_id frame) semi-joins the decoded postings BEFORE
+    the per-doc aggregation, so only surviving postings enter the top-k
+    shuffle; ``require_all`` > 0 keeps only docs hit by that many terms
+    (the intersection)."""
+    from veloci_spark.index import decode_blocks_df
+
+    flats = []
+    for w, blocks in parts:
+        sel = candidate_block_filter(blocks, cand_ids, blocks.sparkSession)
+        flat = decode_blocks_df(sel)
+        if w != 1:
+            flat = flat.withColumn("score", F.col("score") * F.lit(w))
+        flats.append(flat)
+    flat = reduce(DataFrame.unionByName, flats)
+    if allowed is not None:
+        flat = flat.join(allowed, "doc_id", "left_semi")
+    hits = _sum_per(flat, "doc_id", "score", "score_e4", require_all)
+    return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k)
+
+
+def _blockmax(
+    parts: Sequence[tuple[int, DataFrame]],
+    postings: int,
+    k: int,
+    require_all: int = 0,
+    allowed: Optional[DataFrame] = None,
+    start_blocks: int = 8,
+    max_iters: int = 8,
+    stats: Optional[dict] = None,
+) -> DataFrame:
+    """Block-max WAND over ``parts``, rank-identical to :func:`_scored`
+    with the same arguments: bounds ub(block) = Σ_f Σ_t w_f ·
+    block_max_{f,t} from metadata alone (with ``require_all``, only
+    blocks holding every term), then :func:`wand.blockmax_topk`.
+
+    ``postings`` is the matched ``num_occurences`` sum from the
+    dictionary collect: at or below WAND_SMALL_POSTINGS the loop's extra
+    jobs cannot pay for themselves, so ONE full decode answers instead —
+    rank-identical by the same guarantee as the loop's fallback."""
+    ubs = reduce(
+        DataFrame.unionByName,
+        [
+            blocks.select("block_no", (F.col("max_score") * F.lit(w)).alias("ub"))
+            for w, blocks in parts
+        ],
+    )
+    block_ub = _sum_per(ubs, "block_no", "ub", "ub", require_all)
+    if postings <= WAND_SMALL_POSTINGS:
+        if stats is not None:
+            stats["blocks_total"] = stats["blocks_decoded"] = block_ub.count()
+        return _scored(parts, k, require_all, allowed)
+
+    def _exact(cand_ids: Optional[list]) -> list:
+        sel = parts
+        if cand_ids is None and require_all:
+            # even the full fallback only decodes metadata-surviving blocks
+            survivors = F.broadcast(block_ub.select("block_no"))
+            sel = [(w, b.join(survivors, "block_no", "left_semi")) for w, b in parts]
+        return _scored(sel, k, require_all, allowed, cand_ids).collect()
+
+    return blockmax_topk(
+        block_ub,
+        _exact,
+        k,
+        "doc_id long, score_e4 long",
+        lambda r: r["score_e4"],
+        start_blocks=start_blocks,
+        max_iters=max_iters,
+        stats=stats,
+        owned=[blocks for _, blocks in parts],
+    )
 
 
 def bm25_topk(
@@ -271,15 +394,10 @@ def bm25_topk(
 ) -> DataFrame:
     """Exhaustive BM25 top-k: (doc_id, score_e4), OR-sum over terms,
     deterministic (score desc, doc_id desc) order."""
-    from veloci_spark.index import decode_blocks_df
-
     ids = _matched_term_ids(index, field, terms) if _ids is None else _ids
     if not ids:
         return _empty_topk(index.spark)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
-    hits = flat.groupBy("doc_id").agg(F.sum("score").alias("score_e4"))
-    return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k)
+    return _scored([(1, _term_blocks(index, field, ids))], k)
 
 
 def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFrame:
@@ -299,15 +417,7 @@ def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFr
     empty_schema = "doc_id long, term string, term_score_e4 long, score_e4 long"
     if not ids:
         return spark.createDataFrame([], empty_schema)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
-    top_rows = (
-        flat.groupBy("doc_id")
-        .agg(F.sum("score").alias("score_e4"))
-        .orderBy(F.desc("score_e4"), F.desc("doc_id"))
-        .limit(k)
-        .collect()
-    )
+    top_rows = bm25_topk(index, field, terms, k, _ids=ids).collect()
     if not top_rows:
         return spark.createDataFrame([], empty_schema)
     totals = spark.createDataFrame(
@@ -316,6 +426,7 @@ def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFr
     names = index.dictionary(field).where(F.col("term_id").isin(ids)).select(
         "term_id", "term"
     )
+    flat = decode_blocks_df(_term_blocks(index, field, ids))
     per_term = (
         flat.where(F.col("doc_id").isin([r["doc_id"] for r in top_rows]))
         .join(F.broadcast(names), "term_id")
@@ -332,21 +443,11 @@ def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFr
 def bm25_and_topk(index, field: str, terms: Sequence[str], k: int) -> DataFrame:
     """Conjunctive (posting-list INTERSECTION) BM25 top-k: only docs
     containing ALL terms; score = integer sum of per-term entries."""
-    from veloci_spark.index import decode_blocks_df
-
     uniq = sorted(set(terms))
     ids = _matched_term_ids(index, field, uniq)
     if len(ids) < len(uniq):  # some term absent from the corpus entirely
         return _empty_topk(index.spark)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
-    hits = (
-        flat.groupBy("doc_id")
-        .agg(F.sum("score").alias("score_e4"), F.count("*").alias("n"))
-        .where(F.col("n") == len(ids))
-        .select("doc_id", "score_e4")
-    )
-    return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k)
+    return _scored([(1, _term_blocks(index, field, ids))], k, require_all=len(ids))
 
 
 def bm25_and_wand_topk(
@@ -368,57 +469,19 @@ def bm25_and_wand_topk(
     exactly; iterate until the kth exact score strictly beats every
     unexamined block's bound.
     """
-    from veloci_spark.index import decode_blocks_df
-
-    spark = index.spark
     uniq = sorted(set(terms))
-    ids = _matched_term_ids(index, field, uniq)
-    if len(ids) < len(uniq):
-        return _empty_topk(spark)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids)).persist()
-    # metadata-only intersection: keep block_nos where EVERY term appears
-    block_ub = (
-        blocks.groupBy("block_no")
-        .agg(F.sum("max_score").alias("ub"), F.count("*").alias("n_terms"))
-        .where(F.col("n_terms") == len(ids))
-        .select("block_no", "ub")
-        .persist()
-    )
-
-    def _exact(cand_ids: Optional[list]) -> list:
-        # even the full fallback only decodes metadata-surviving blocks —
-        # a block missing a term can't contribute an intersection doc
-        if cand_ids is not None:
-            sel = candidate_block_filter(blocks, cand_ids, spark)
-        else:
-            sel = blocks.join(
-                F.broadcast(block_ub.select("block_no")), "block_no", "left_semi"
-            )
-        flat = decode_blocks_df(sel)
-        hits = (
-            flat.groupBy("doc_id")
-            .agg(F.sum("score").alias("score_e4"), F.count("*").alias("n"))
-            .where(F.col("n") == len(ids))
-            .select("doc_id", "score_e4")
-        )
-        return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k).collect()
-
-    ub_rows, truncated = collect_block_ubs(block_ub)
-    result_rows, _decoded = wand_driver_loop(
-        ub_rows,
-        truncated,
+    meta = _matched_term_meta(index, field, uniq)
+    if len(meta) < len(uniq):
+        return _empty_topk(index.spark)
+    parts, postings = _field_parts(index, {field: 1}, uniq, {field: meta})
+    return _blockmax(
+        parts,
+        postings,
         k,
-        _exact,
-        lambda r: r["score_e4"],
+        require_all=len(meta),
         start_blocks=start_blocks,
         max_iters=max_iters,
     )
-    if result_rows is None:
-        result_rows = _exact(None)
-
-    blocks.unpersist()
-    block_ub.unpersist()
-    return spark.createDataFrame(result_rows, "doc_id long, score_e4 long")
 
 
 def bm25_wand_topk(
@@ -429,8 +492,7 @@ def bm25_wand_topk(
     start_blocks: int = 8,
     max_iters: int = 8,
     stats: Optional[dict] = None,
-    _ids: Optional[list] = None,
-    small_postings: Optional[int] = None,
+    _meta: Optional[list] = None,
 ) -> DataFrame:
     """Block-max WAND BM25 top-k, rank-identical to :func:`bm25_topk`.
 
@@ -444,79 +506,14 @@ def bm25_wand_topk(
     and higher doc_id would win the tie-break).  On budget exhaustion,
     fall back to one full decode — never a truncated result.
     """
-    from veloci_spark.index import decode_blocks_df
-
-    spark = index.spark
-    if _ids is None:
-        meta = _matched_term_meta(index, field, terms)
-        ids = [tid for tid, _ in meta]
-    else:
-        meta = None
-        ids = _ids
-    if not ids:
-        return _empty_topk(spark)
-
-    # Small-volume short-circuit on the SAME zero-extra-job dispatch
-    # signal bm25_auto_topk uses (dictionary occurrence counts riding
-    # the term-id collect): below the threshold the block-max machinery
-    # cannot pay for itself — the benched common-term queries showed the
-    # loop decoding a tiny probe, certificate-jumping to the WHOLE
-    # window, and then running the full-decode fallback anyway (three
-    # decode-side jobs where one suffices; rank-identical by the same
-    # fallback guarantee).  Production-scale posting lists exceed the
-    # threshold and take the pruning loop exactly as before.
-    small = _wand_small_postings() if small_postings is None else small_postings
-    if meta is not None and sum(occ for _, occ in meta) <= small:
-        blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-        flat = decode_blocks_df(blocks)
-        hits = flat.groupBy("doc_id").agg(F.sum("score").alias("score_e4"))
-        result_rows = (
-            hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k).collect()
-        )
-        if stats is not None:
-            n_blocks = blocks.select("block_no").distinct().count()
-            stats["blocks_total"] = int(n_blocks)
-            stats["blocks_decoded"] = int(n_blocks)
-        return spark.createDataFrame(result_rows, "doc_id long, score_e4 long")
-
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids)).persist()
-    block_ub = blocks.groupBy("block_no").agg(F.sum("max_score").alias("ub"))
-
-    def _exact_topk(cand_ids: Optional[list]) -> list:
-        sel = candidate_block_filter(blocks, cand_ids, spark)
-        flat = decode_blocks_df(sel)
-        hits = flat.groupBy("doc_id").agg(F.sum("score").alias("score_e4"))
-        return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k).collect()
-
-    # one bounded metadata collect feeds the whole loop (candidates,
-    # max-remaining bound and certificate cap are driver-side array
-    # reads); each iteration then costs exactly one decode job
-    ub_rows, truncated = collect_block_ubs(block_ub)
-    n_blocks_total = None
-    if stats is not None:
-        n_blocks_total = block_ub.count() if truncated else len(ub_rows)
-
-    result_rows, decoded = wand_driver_loop(
-        ub_rows,
-        truncated,
-        k,
-        _exact_topk,
-        lambda r: r["score_e4"],
-        start_blocks=start_blocks,
-        max_iters=max_iters,
+    parts, postings = _field_parts(
+        index, {field: 1}, terms, None if _meta is None else {field: _meta}
     )
-    if result_rows is None:
-        result_rows = _exact_topk(None)
-        decoded = n_blocks_total if n_blocks_total is not None else len(ub_rows)
-
-    if stats is not None:
-        stats["blocks_total"] = int(n_blocks_total or 0)
-        stats["blocks_decoded"] = int(
-            decoded if decoded is not None else (n_blocks_total or 0)
-        )
-
-    blocks.unpersist()
-    return spark.createDataFrame(result_rows, "doc_id long, score_e4 long")
+    if not parts:
+        return _empty_topk(index.spark)
+    return _blockmax(
+        parts, postings, k, start_blocks=start_blocks, max_iters=max_iters, stats=stats
+    )
 
 
 # --------------------------- auto dispatch ------------------------------
@@ -536,49 +533,35 @@ def bm25_wand_topk(
 # earlier: override per call or via SPARK_GRAFT_WAND_MIN_POSTINGS.
 WAND_MIN_POSTINGS = 1_000_000_000
 
-#: Below this total matched-postings volume the forced-WAND paths run
-#: ONE full decode directly instead of the probe/certificate loop whose
-#: fallback they would hit anyway (see bm25_wand_topk).  Calibration: a
+#: At or below this total matched-postings volume every block-max path
+#: runs ONE full decode directly instead of the probe/certificate loop
+#: whose fallback it would hit anyway (see _blockmax).  Calibration: a
 #: 1M-posting decode is a single sub-second job at any parallelism, and
 #: the round-5 crossover ladder measured the full decode beating the
 #: loop at EVERY rung it could reach (0.35M–22.7M matched postings,
 #: 1.76–2.05x), so below this bound the loop's extra jobs (metadata
 #: collect + probe decode + certificate re-decode) can never pay.
-#: Override via SPARK_GRAFT_WAND_SMALL_POSTINGS.
 WAND_SMALL_POSTINGS = 1_000_000
 
 
 #: bm25_from_tf broadcast-hint bound: below this corpus doc count the
 #: per-doc-length and document-frequency aggregates are hinted
-#: broadcast at build time (override via
-#: SPARK_GRAFT_BM25_BUILD_BROADCAST_DOCS; set 0 to disable).
+#: broadcast at build time.
 BM25_BUILD_BROADCAST_DOCS = 1_000_000
 
 
-def _bm25_build_broadcast_docs() -> int:
-    import os
+def _use_wand(total: int, override: Optional[int], stats: Optional[dict]) -> bool:
+    """The planner rule: block-max WAND at or above the matched-postings
+    threshold, exhaustive below it; the arm lands in ``stats``."""
+    if override is None:
+        import os
 
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_BM25_BUILD_BROADCAST_DOCS", BM25_BUILD_BROADCAST_DOCS
-        )
-    )
-
-
-def _wand_small_postings() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_WAND_SMALL_POSTINGS", WAND_SMALL_POSTINGS)
-    )
-
-
-def _wand_min_postings(override: Optional[int]) -> int:
-    if override is not None:
-        return int(override)
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_WAND_MIN_POSTINGS", WAND_MIN_POSTINGS))
+        override = os.environ.get("SPARK_GRAFT_WAND_MIN_POSTINGS", WAND_MIN_POSTINGS)
+    wand = total >= int(override)
+    if stats is not None:
+        stats["dispatch"] = "wand" if wand else "exhaustive"
+        stats["matched_postings"] = total
+    return wand
 
 
 def bm25_auto_topk(
@@ -604,17 +587,9 @@ def bm25_auto_topk(
     SAME bounded dictionary collect that builds the literal term_id
     IN-list, so the dispatch decision costs zero extra Spark jobs."""
     meta = _matched_term_meta(index, field, terms)
-    ids = [tid for tid, _ in meta]
-    total = sum(occ for _, occ in meta)
-    if total < _wand_min_postings(min_postings):
-        if stats is not None:
-            stats["dispatch"] = "exhaustive"
-            stats["matched_postings"] = total
-        return bm25_topk(index, field, terms, k, _ids=ids)
-    if stats is not None:
-        stats["dispatch"] = "wand"
-        stats["matched_postings"] = total
-    return bm25_wand_topk(index, field, terms, k, stats=stats, _ids=ids)
+    if _use_wand(sum(occ for _, occ in meta), min_postings, stats):
+        return bm25_wand_topk(index, field, terms, k, stats=stats, _meta=meta)
+    return bm25_topk(index, field, terms, k, _ids=[tid for tid, _ in meta])
 
 
 def bm25f_auto_topk(
@@ -630,23 +605,10 @@ def bm25f_auto_topk(
     summed ACROSS fields (each field's occurrence counts ride its own
     bounded dictionary collect, so the decision still costs zero extra
     jobs relative to either variant)."""
-    ids_by_field: dict[str, list[int]] = {}
-    total = 0
-    for fld in sorted(field_weights):
-        meta = _matched_term_meta(index, fld, terms)
-        ids_by_field[fld] = [tid for tid, _ in meta]
-        total += sum(occ for _, occ in meta)
-    if total < _wand_min_postings(min_postings):
-        if stats is not None:
-            stats["dispatch"] = "exhaustive"
-            stats["matched_postings"] = total
-        return bm25f_topk(index, field_weights, terms, k, _ids_by_field=ids_by_field)
-    if stats is not None:
-        stats["dispatch"] = "wand"
-        stats["matched_postings"] = total
-    return bm25f_wand_topk(
-        index, field_weights, terms, k, _ids_by_field=ids_by_field
-    )
+    meta = {fld: _matched_term_meta(index, fld, terms) for fld in sorted(field_weights)}
+    total = sum(occ for m in meta.values() for _, occ in m)
+    arm = bm25f_wand_topk if _use_wand(total, min_postings, stats) else bm25f_topk
+    return arm(index, field_weights, terms, k, _meta_by_field=meta)
 
 
 # --------------------------- phrase top-k -------------------------------
@@ -689,8 +651,6 @@ def bm25_phrase_topk(index, field: str, terms: Sequence[str], k: int) -> DataFra
     equality predicates; stage 2 is bounded candidate work, never the
     corpus.  Flat (non-nested) bm25 fields only.
     """
-    from veloci_spark.index import decode_blocks_df
-
     spark = index.spark
     n = len(terms)
     assert n >= 2, "a phrase needs at least two tokens"
@@ -774,10 +734,7 @@ def bm25_phrase_topk(index, field: str, terms: Sequence[str], k: int) -> DataFra
 
     # 3. BM25 scoring restricted to verified docs
     ids = sorted({tmap[t] for t in terms})
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks).join(cand, "doc_id", "left_semi")
-    hits = flat.groupBy("doc_id").agg(F.sum("score").alias("score_e4"))
-    return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k)
+    return _scored([(1, _term_blocks(index, field, ids))], k, allowed=cand)
 
 
 # ------------------------- BM25F (multi-field) --------------------------
@@ -787,7 +744,7 @@ def bm25f_topk(
     field_weights: dict[str, int],
     terms: Sequence[str],
     k: int,
-    _ids_by_field: Optional[dict] = None,
+    _meta_by_field: Optional[dict] = None,
 ) -> DataFrame:
     """Weighted multi-field BM25 ("BM25F" in the simple per-field-sum
     form): score(d) = Σ_f w_f · Σ_t bm25_f(t, d), disjunctive over terms
@@ -799,31 +756,8 @@ def bm25f_topk(
     Each field's blocks are decoded independently (term ids are
     per-field) with a literal term_id IN pushed to its partition-pruned
     scan; the weighted flats union into ONE per-doc aggregation."""
-    from functools import reduce as _reduce
-
-    from veloci_spark.index import decode_blocks_df
-
-    parts = []
-    for fld in sorted(field_weights):
-        w = int(field_weights[fld])
-        ids = (
-            _ids_by_field[fld]
-            if _ids_by_field is not None
-            else _matched_term_ids(index, fld, terms)
-        )
-        if not ids:
-            continue
-        blocks = index.bm25_blocks(fld).where(F.col("term_id").isin(ids))
-        parts.append(
-            decode_blocks_df(blocks).select(
-                "doc_id", (F.col("score") * F.lit(w)).alias("ws")
-            )
-        )
-    if not parts:
-        return _empty_topk(index.spark)
-    u = _reduce(DataFrame.unionByName, parts)
-    hits = u.groupBy("doc_id").agg(F.sum("ws").alias("score_e4"))
-    return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k)
+    parts, _ = _field_parts(index, field_weights, terms, _meta_by_field)
+    return _scored(parts, k) if parts else _empty_topk(index.spark)
 
 
 def bm25f_wand_topk(
@@ -833,7 +767,7 @@ def bm25f_wand_topk(
     k: int,
     start_blocks: int = 8,
     max_iters: int = 8,
-    _ids_by_field: Optional[dict] = None,
+    _meta_by_field: Optional[dict] = None,
 ) -> DataFrame:
     """Block-max pruned BM25F, rank-identical to :func:`bm25f_topk`.
 
@@ -843,87 +777,12 @@ def bm25f_wand_topk(
     block_max_{f,t}.  Phase 2 decodes only candidate blocks in every
     field; iterate until the kth exact integer score strictly beats the
     max undecoded bound, else fall back to one full decode."""
-    from functools import reduce as _reduce
-
-    from veloci_spark.index import decode_blocks_df
-
-    spark = index.spark
-    per_field: list[tuple[int, DataFrame]] = []
-    total_occ = 0
-    have_meta = _ids_by_field is None
-    for fld in sorted(field_weights):
-        w = int(field_weights[fld])
-        if _ids_by_field is not None:
-            ids = _ids_by_field[fld]
-        else:
-            meta = _matched_term_meta(index, fld, terms)
-            ids = [tid for tid, _ in meta]
-            total_occ += sum(occ for _, occ in meta)
-        if not ids:
-            continue
-        blk = index.bm25_blocks(fld).where(F.col("term_id").isin(ids))
-        per_field.append((w, blk))
-    if not per_field:
-        return _empty_topk(spark)
-
-    def _exact_full() -> list:
-        flats = [
-            decode_blocks_df(blk).select(
-                "doc_id", (F.col("score") * F.lit(w)).alias("ws")
-            )
-            for w, blk in per_field
-        ]
-        u = _reduce(DataFrame.unionByName, flats)
-        hits = u.groupBy("doc_id").agg(F.sum("ws").alias("score_e4"))
-        return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k).collect()
-
-    # same small-volume short-circuit as bm25_wand_topk: one full decode
-    # job, rank-identical via the fallback guarantee
-    if have_meta and total_occ <= _wand_small_postings():
-        return spark.createDataFrame(
-            _exact_full(), "doc_id long, score_e4 long"
-        )
-    per_field = [(w, blk.persist()) for w, blk in per_field]
-
-    ub_parts = [
-        blk.select("block_no", (F.col("max_score") * F.lit(w)).alias("wub"))
-        for w, blk in per_field
-    ]
-    block_ub = (
-        _reduce(DataFrame.unionByName, ub_parts)
-        .groupBy("block_no")
-        .agg(F.sum("wub").alias("ub"))
+    parts, postings = _field_parts(index, field_weights, terms, _meta_by_field)
+    if not parts:
+        return _empty_topk(index.spark)
+    return _blockmax(
+        parts, postings, k, start_blocks=start_blocks, max_iters=max_iters
     )
-
-    def _exact(cand_ids: Optional[list]) -> list:
-        flats = []
-        for w, blk in per_field:
-            sel = candidate_block_filter(blk, cand_ids, spark)
-            flats.append(
-                decode_blocks_df(sel).select(
-                    "doc_id", (F.col("score") * F.lit(w)).alias("ws")
-                )
-            )
-        u = _reduce(DataFrame.unionByName, flats)
-        hits = u.groupBy("doc_id").agg(F.sum("ws").alias("score_e4"))
-        return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k).collect()
-
-    ub_rows, truncated = collect_block_ubs(block_ub)
-    result_rows, _decoded = wand_driver_loop(
-        ub_rows,
-        truncated,
-        k,
-        _exact,
-        lambda r: r["score_e4"],
-        start_blocks=start_blocks,
-        max_iters=max_iters,
-    )
-    if result_rows is None:
-        result_rows = _exact(None)
-
-    for _, blk in per_field:
-        blk.unpersist()
-    return spark.createDataFrame(result_rows, "doc_id long, score_e4 long")
 
 
 # ---------------------------- batched queries ----------------------------
@@ -982,9 +841,8 @@ def bm25_batch_topk(
         return empty
     qmap = spark.createDataFrame(qmap_rows, "query_id string, term_id long")
     ids = sorted({i for _, i in qmap_rows})
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
     scored = (
-        decode_blocks_df(blocks)
+        decode_blocks_df(_term_blocks(index, field, ids))
         .join(F.broadcast(qmap), "term_id")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("score").alias("score_e4"))
@@ -1048,19 +906,14 @@ def bm25_filtered_topk(
     aggregation, so only surviving postings enter the top-k shuffle.
     AQE picks the semi-join strategy from the filtered side's runtime
     size (a selective predicate ⇒ broadcast hash join)."""
-    from veloci_spark.index import decode_blocks_df
-
     ids = _matched_term_ids(index, field, terms)
     if not ids:
         return _empty_topk(index.spark)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
-    hits = (
-        flat.join(_allowed_docs(index, doc_filter), "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.sum("score").alias("score_e4"))
+    return _scored(
+        [(1, _term_blocks(index, field, ids))],
+        k,
+        allowed=_allowed_docs(index, doc_filter),
     )
-    return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k)
 
 
 def bm25_filtered_wand_topk(
@@ -1085,43 +938,17 @@ def bm25_filtered_wand_topk(
     all filtered away still look promising), which costs extra
     iterations, never wrong results; on budget exhaustion the fallback
     is one full filtered decode."""
-    from veloci_spark.index import decode_blocks_df
-
-    spark = index.spark
-    ids = _matched_term_ids(index, field, terms)
-    if not ids:
-        return _empty_topk(spark)
-    allowed = _allowed_docs(index, doc_filter)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids)).persist()
-    block_ub = blocks.groupBy("block_no").agg(F.sum("max_score").alias("ub"))
-
-    def _exact_topk(cand_ids: Optional[list]) -> list:
-        sel = blocks
-        if cand_ids is not None:
-            sel = sel.where(F.col("block_no").isin(cand_ids))
-        flat = decode_blocks_df(sel)
-        hits = (
-            flat.join(allowed, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score_e4"))
-        )
-        return hits.orderBy(F.desc("score_e4"), F.desc("doc_id")).limit(k).collect()
-
-    ub_rows, truncated = collect_block_ubs(block_ub)
-    result_rows, _decoded = wand_driver_loop(
-        ub_rows,
-        truncated,
+    parts, postings = _field_parts(index, {field: 1}, terms)
+    if not parts:
+        return _empty_topk(index.spark)
+    return _blockmax(
+        parts,
+        postings,
         k,
-        _exact_topk,
-        lambda r: r["score_e4"],
+        allowed=_allowed_docs(index, doc_filter),
         start_blocks=start_blocks,
         max_iters=max_iters,
     )
-    if result_rows is None:
-        result_rows = _exact_topk(None)
-
-    blocks.unpersist()
-    return spark.createDataFrame(result_rows, "doc_id long, score_e4 long")
 
 
 def bm25_topk_after(
@@ -1150,8 +977,7 @@ def bm25_topk_after(
     ids = _matched_term_ids(index, field, terms)
     if not ids:
         return _empty_topk(index.spark)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
+    flat = decode_blocks_df(_term_blocks(index, field, ids))
     hits = flat.groupBy("doc_id").agg(F.sum("score").alias("score_e4"))
     if after is not None:
         s, d = int(after[0]), int(after[1])
@@ -1194,8 +1020,7 @@ def bm25_collapse_topk(
     ids = _matched_term_ids(index, field, terms)
     if not ids:
         return spark.createDataFrame([], empty_schema)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
+    flat = decode_blocks_df(_term_blocks(index, field, ids))
     scores = flat.groupBy("doc_id").agg(F.sum("score").alias("score_e4"))
     groups = index.docstore().select("doc_id", group_col)
     w = Window.partitionBy(group_col).orderBy(
@@ -1282,8 +1107,7 @@ def bm25_mlt_topk(
     ids = [r["term_id"] for r in chosen]
     if not ids:
         return _empty_topk(spark)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
+    flat = decode_blocks_df(_term_blocks(index, field, ids))
     hits = (
         flat.where(F.col("doc_id") != int(src_doc_id))
         .groupBy("doc_id")
@@ -1384,10 +1208,7 @@ def bm25_prf_topk(
     weights = F.create_map(
         *[F.lit(x) for pair in wmap.items() for x in pair]
     )
-    blocks = index.bm25_blocks(field).where(
-        F.col("term_id").isin(list(wmap))
-    )
-    flat = decode_blocks_df(blocks)
+    flat = decode_blocks_df(_term_blocks(index, field, list(wmap)))
     hits = flat.groupBy("doc_id").agg(
         F.sum(F.col("score") * weights[F.col("term_id")]).alias("score_e4")
     )
@@ -1457,8 +1278,7 @@ def bm25_near_topk(
     if len(ids) < n:  # some term absent from the corpus entirely
         return _empty_topk(spark)
 
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks).persist()
+    flat = decode_blocks_df(_term_blocks(index, field, ids)).persist()
     try:
         cand = (
             flat.groupBy("doc_id")
@@ -1882,8 +1702,7 @@ def bm25_facets(
     ids = _matched_term_ids(index, field, terms)
     if not ids:
         return spark.createDataFrame([], schema)
-    blocks = index.bm25_blocks(field).where(F.col("term_id").isin(ids))
-    flat = decode_blocks_df(blocks)
+    flat = decode_blocks_df(_term_blocks(index, field, ids))
     hits = flat.groupBy("doc_id").agg(F.sum("score").alias("score_e4"))
     joined = hits.join(
         index.docstore().select("doc_id", *cols), "doc_id"

@@ -111,6 +111,8 @@ def bm25_text_topk(
     # the pool (absent terms contribute 0 via the tf>0 guard, exactly
     # like the old per-present-term rows).
     uniq = list(dict.fromkeys(str(t) for t in terms))
+    if not uniq:
+        return spark.createDataFrame([], "doc_id long, bm25_e4 long")
     words = _docs(spark, sf_dir).select(
         "doc_id", words_expr("text").alias("_w")
     )

@@ -7,27 +7,34 @@ cannot reach the current top-k threshold. In a batch engine the
 document-at-a-time cursor loop doesn't apply, so we adapt it:
 
 1. posting blocks are doc-aligned (block_no = doc_id // block_docs), so
-   every term's block for a doc range joins on block_no;
+   every term's (and every field's) block for a doc range joins on
+   block_no;
 2. phase 1 computes, from block-max METADATA ONLY (no decompression),
-   an upper bound per block_no:
-       ub(block) = Σ_slots max_t(term_score_t · block_max_t / 100) · p²
-   where p = number of query term slots PRESENT in the block (the OR
-   n_distinct² ceiling for any doc of that block);
+   an upper bound ``ub`` per block_no;
 3. phase 2 decodes only the blocks with the highest upper bounds and
-   computes exact OR scores for their docs; the kth exact score is the
+   computes exact scores for their docs; the kth exact score is the
    threshold;
-4. if any undecoded block's ub exceeds the threshold, the candidate set
-   doubles and phase 2 repeats (typically 1–2 iterations).
+4. while an undecoded block's ub can still reach the threshold, the
+   candidate window grows (certificate jump) and phase 2 repeats; when
+   the budget runs out, one full decode answers instead.
 
-The exact scores use the same formulas as the exhaustive path, so the
-result is identical to executor.search — only cheaper: at 10^12 docs a
-rare-term query decodes a handful of blocks instead of scanning full
-posting lists.
+:func:`blockmax_topk` is that loop, once, for every pruned top-k in the
+engine: the native OR path (:func:`wand_or_topk`, float scores and
+slot-present p² bounds) and the BM25 paths in bm25.py (integer scores,
+bounds ``Σ w·block_max``).  A caller supplies the bound frame and an
+exact top-k function; the driver owns the metadata collect, the loop,
+the fallback, the ``blocks_total``/``blocks_decoded`` stats and the
+release of the frames it cached.  The exact scores use the same
+formulas as the exhaustive paths, so the result is identical to them —
+only cheaper: at 10^12 docs a rare-term query decodes a handful of
+blocks instead of scanning full posting lists.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+import operator
+from functools import reduce
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -100,14 +107,14 @@ def wand_driver_loop(
     quantize=None,
     max_inlist: int = MAX_INLIST,
 ) -> tuple[Optional[list], Optional[int]]:
-    """Driver-side block-max iteration shared by all four WAND paths
-    (OR / BM25 / BM25-AND / BM25F).  ``ub_rows`` is the pre-collected
-    desc-sorted bound list from :func:`collect_block_ubs`; ``exact_fn``
-    maps a candidate block-id list to collected exact top-k rows (the
-    one Spark job per iteration); ``score_of`` extracts the score from a
-    result row; ``quantize`` maps scores/bounds into the space the
-    stop-condition compares in (identity for integer BM25 scores, e4
-    quantization for the float OR path).
+    """Driver-side block-max iteration behind :func:`blockmax_topk`.
+    ``ub_rows`` is the pre-collected desc-sorted bound list from
+    :func:`collect_block_ubs`; ``exact_fn`` maps a candidate block-id
+    list to collected exact top-k rows (the one Spark job per
+    iteration); ``score_of`` extracts the score from a result row;
+    ``quantize`` maps scores/bounds into the space the stop-condition
+    compares in (identity for integer BM25 scores, e4 quantization for
+    the float OR path).
 
     Returns ``(result_rows, decoded_blocks)`` or ``(None, None)`` when
     the caller must run its full-decode fallback (budget exhausted or
@@ -159,6 +166,62 @@ def wand_driver_loop(
     return None, None
 
 
+def blockmax_topk(
+    block_ub: DataFrame,
+    exact_fn,
+    k: int,
+    schema: str,
+    score_of,
+    quantize=None,
+    start_blocks: int = 8,
+    max_iters: int = 8,
+    stats: Optional[dict] = None,
+    owned: Sequence[DataFrame] = (),
+) -> DataFrame:
+    """The one block-max top-k driver.  ``block_ub`` is the lazy
+    ``(block_no, ub)`` bound frame; ``exact_fn(cand_ids)`` returns the
+    collected exact top-k rows over the candidate blocks (``None`` =
+    every block); ``owned`` are the frames the loop re-reads, cached
+    here for its duration and released on exit — on error too.
+
+    ONE bounded metadata collect feeds the whole loop; each iteration
+    then dispatches exactly one Spark job (the candidate decode).  When
+    the loop gives up (budget exhausted, e.g. many equal bounds at huge
+    scale), one final FULL decode answers, so no doc from an undecoded
+    block is ever silently dropped.  ``stats`` (optional) receives
+    ``blocks_total``/``blocks_decoded``.  ``k <= 0`` is the empty
+    frame, with no Spark job."""
+    spark = block_ub.sparkSession
+    if k <= 0:
+        return spark.createDataFrame([], schema)
+    for f in owned:
+        f.persist()
+    try:
+        ub_rows, truncated = collect_block_ubs(block_ub)
+        n_total = len(ub_rows)
+        if stats is not None and truncated:
+            n_total = block_ub.count()
+        rows, decoded = wand_driver_loop(
+            ub_rows,
+            truncated,
+            k,
+            exact_fn,
+            score_of,
+            start_blocks=start_blocks,
+            max_iters=max_iters,
+            quantize=quantize,
+        )
+        if rows is None:
+            rows, decoded = exact_fn(None), n_total
+        if stats is not None:
+            stats["blocks_total"] = int(n_total)
+            stats["blocks_decoded"] = int(min(decoded, n_total))
+        return spark.createDataFrame(rows, schema)
+    finally:
+        for f in owned:
+            f.unpersist()
+
+
 def wand_or_topk(
     index: Index,
     node: OrNode | SearchPart,
@@ -184,10 +247,7 @@ def wand_or_topk(
     ub_frames = []
     block_frames = []
     for field, terms_list in per_field_terms.items():
-        terms = terms_list[0]
-        for t in terms_list[1:]:
-            terms = terms.unionAll(t)
-        terms = terms.persist()
+        terms = reduce(DataFrame.unionAll, terms_list)
         blocks = index.postings_blocks(field).join(
             F.broadcast(terms.select("term_id", "term_score", "slot")), "term_id"
         )
@@ -201,9 +261,7 @@ def wand_or_topk(
                 ).alias("ub_part"),
             )
         )
-    ubs = ub_frames[0]
-    for u in ub_frames[1:]:
-        ubs = ubs.unionAll(u)
+    ubs = reduce(DataFrame.unionAll, ub_frames)
     # per-block bound uses the number of slots PRESENT in the block (p),
     # not the query's slot count S: a doc in the block matches at most p
     # distinct slots, so its score is ≤ Σ slot_max · p² — on skewed
@@ -219,7 +277,6 @@ def wand_or_topk(
                 * F.pow(F.count("slot_ub").cast("double"), F.lit(2.0))
             ).alias("ub")
         )
-        .persist()
     )
 
     def _exact_topk(cand_ids: Optional[list]) -> list:
@@ -245,9 +302,7 @@ def wand_or_topk(
                     ).alias("s"),
                 )
             )
-        hits = hit_frames[0]
-        for h in hit_frames[1:]:
-            hits = hits.unionAll(h)
+        hits = reduce(DataFrame.unionAll, hit_frames)
         # ONE shuffle instead of two: the slot count is the query's term
         # count (driver-known, small), so per-slot maxes become columns
         # of a single conditional aggregation on doc_id — the former
@@ -263,15 +318,11 @@ def wand_or_topk(
         slot_cols = [
             F.coalesce(F.col(f"m{i}"), F.lit(0.0)) for i in range(n_slots)
         ]
-        total = slot_cols[0]
-        for c in slot_cols[1:]:
-            total = total + c
-        present = [
-            F.when(c >= F.lit(1e-5), 1).otherwise(0) for c in slot_cols
-        ]
-        n_present = present[0]
-        for c in present[1:]:
-            n_present = n_present + c
+        total = reduce(operator.add, slot_cols)
+        n_present = reduce(
+            operator.add,
+            [F.when(c >= F.lit(1e-5), 1).otherwise(0) for c in slot_cols],
+        )
         exact = per_doc.select(
             "doc_id",
             (total * F.pow(n_present.cast("double"), F.lit(2.0))).alias(
@@ -283,44 +334,18 @@ def wand_or_topk(
         ).limit(k)
         return topk.collect()
 
-    # ONE bounded metadata collect feeds the whole loop; each iteration
-    # then dispatches exactly one Spark job (the candidate decode).  The
-    # stop-condition compares in QUANTIZED space: an undecoded block
+    # the stop-condition compares in QUANTIZED space: an undecoded block
     # whose ub quantizes to the same e4 bucket as the kth hit could
-    # still hold a doc that wins the (score_e4, doc_id desc) tie-break.
-    ub_rows, truncated = collect_block_ubs(block_ub)
-    n_blocks_total = None
-    if stats is not None:
-        n_blocks_total = block_ub.count() if truncated else len(ub_rows)
-
-    rows, decoded = wand_driver_loop(
-        ub_rows,
-        truncated,
-        k,
+    # still hold a doc that wins the (score_e4, doc_id desc) tie-break
+    return blockmax_topk(
+        block_ub,
         _exact_topk,
+        k,
+        "doc_id long, score double",
         lambda r: r["score"],
+        quantize=py_score_e4,
         start_blocks=start_blocks,
         max_iters=max_iters,
-        quantize=py_score_e4,
+        stats=stats,
+        owned=[terms for _, terms, _ in block_frames] + [block_ub],
     )
-    if rows is not None:
-        result = spark.createDataFrame(rows, "doc_id long, score double")
-        m = decoded
-    else:
-        # iteration budget exhausted (plausible with many equal upper
-        # bounds, e.g. stop-word terms at huge scale) — fall back to one
-        # final FULL decode so no doc from an undecoded block is silently
-        # dropped; identical result to the exhaustive executor path
-        result = spark.createDataFrame(
-            _exact_topk(None), "doc_id long, score double"
-        )
-        m = n_blocks_total if n_blocks_total is not None else len(ub_rows)
-
-    if stats is not None:
-        stats["blocks_total"] = int(n_blocks_total or 0)
-        stats["blocks_decoded"] = int(min(m, n_blocks_total or m))
-
-    for _, terms, _ in block_frames:
-        terms.unpersist()
-    block_ub.unpersist()
-    return result
