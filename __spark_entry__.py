@@ -24,7 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the full inverted index over sf0.001 documents and
     run a boolean OR query with a lang filter and facet — exercising
-    tokenizer, dictionary, posting codec, set ops and top-k."""
+    tokenizer, dictionary, posting blocks, set ops and top-k."""
     from veloci_spark.entry_queries import documents_index, _run_request
     from veloci_spark.request import OrNode, Request, SearchPart
 

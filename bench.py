@@ -1508,7 +1508,7 @@ def run_ann_scaling(
 
 def run_decode_scaling(sf_dir: str, low: int = 2, high: int = 8, replicate: int = 640) -> dict:
     """Isolated posting-decode kernel at two parallelism levels: the same
-    matched-term exhaustive decode (Arrow/numpy varint kernel) with and
+    matched-term exhaustive decode (JVM inline of the block arrays) with and
     without the downstream aggregation — separates the width-scaling
     kernel from the fixed-cost shuffle that dilutes small-corpus batch
     numbers (see the query-side analysis in BENCH/BASELINE.md)."""
@@ -1875,7 +1875,7 @@ def main():
             f.write(
                 f"\n## Decode-kernel scaling run {time.strftime('%Y-%m-%d %H:%M:%S')}\n\n"
                 "Isolated exhaustive decode of the matched posting blocks "
-                "(Arrow/numpy varint kernel), with and without the downstream "
+                "(JVM inline of the block arrays), with and without the downstream "
                 f"agg+top-k, warm min of 2 per config (corpus {res['sf_dir']}):\n\n"
                 "| phase | "
                 f"local[{res['low_cpus']}] (s) | local[{res['high_cpus']}] (s) | efficiency |\n"

@@ -244,6 +244,83 @@ def test_resume_skips_bm25_stage(spark, tmp_root, bm25_index):
     assert os.path.getmtime(marker) == mtime
 
 
+def test_resume_rebuilds_varint_block_table(spark, tmp_root, bm25_index):
+    # an index built before the array layout: a `data binary` bm25 table
+    # with _SUCCESS and a version-2 manifest.  Resume must rebuild the
+    # table instead of reusing it, and queries must answer.
+    import json
+    import shutil
+
+    from veloci_spark.index import Index
+
+    out = os.path.join(tmp_root, "bm25_index_varint")
+    cfg = IndexConfig(fields=(FieldConfig("body", bm25=True),), block_docs=4)
+    df = spark.createDataFrame(CORPUS, "doc_id long, body string")
+    build_index(spark, df, cfg, out, resume=False)
+    bm25_path = os.path.join(out, "bm25")
+    old = os.path.join(tmp_root, "bm25_index_varint_old_bm25")
+    (
+        spark.read.parquet(bm25_path)
+        .drop("doc_ids", "scores")
+        .withColumn("data", F.lit(bytearray(b"\x01\x02")))
+        .write.mode("overwrite")
+        .partitionBy("field")
+        .parquet(old)
+    )
+    shutil.rmtree(bm25_path)
+    shutil.move(old, bm25_path)
+    manifest_path = os.path.join(out, "manifest.json")
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    manifest["version"] = 2
+    with open(manifest_path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        Index(spark, out)
+
+    idx = build_index(spark, df, cfg, out, resume=True)
+    assert {"doc_ids", "scores"} <= set(spark.read.parquet(bm25_path).columns)
+    assert idx.manifest["version"] == 3
+    got = [tuple(r) for r in bm25_topk(idx, "body", ["alpha", "beta"], 5).collect()]
+    want = [tuple(r) for r in bm25_topk(bm25_index, "body", ["alpha", "beta"], 5).collect()]
+    assert got and got == want
+
+
+_PYTHON_NODES = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def test_decode_and_topk_plans_have_no_python_stage(bm25_index):
+    # block decode runs in the JVM scan stage: no Python worker round trip
+    from veloci_spark.index import decode_blocks_df
+
+    for df in (
+        decode_blocks_df(bm25_index.bm25_blocks("body")),
+        bm25_topk(bm25_index, "body", ["alpha", "beta"], 5),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not [n for n in _PYTHON_NODES if n in plan], plan
+
+
+def test_bm25_doc_ids_are_delta_binary_packed(bm25_index):
+    # the v2 writer delta-bit-packs the sorted ids; v1 would write them
+    # plain and roughly double a dense table
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(bm25_index.path, "bm25", "field=*", "*.parquet"))
+    encodings = []
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                if col.path_in_schema == "doc_ids.list.element":
+                    encodings.append(col.encodings)
+    assert encodings
+    assert all("DELTA_BINARY_PACKED" in e for e in encodings), encodings
+
+
 # ------------------------------------------------- phrase + BM25F engine
 
 PHRASE_CORPUS = [
@@ -402,6 +479,18 @@ def test_bm25_explain_provenance_sums_to_topk(spark, bm25_index):
         assert by_doc[d][0] == total == by_doc[d][1], (d, by_doc[d], total)
 
 
+def test_bm25_explain_decodes_only_topk_blocks(bm25_index):
+    # blocks are doc-aligned: the per-term decode is cut to the top-k
+    # docs' blocks by a block_no predicate on the block scan, before decode
+    import re
+
+    from veloci_spark.bm25 import bm25_explain_topk
+
+    out = bm25_explain_topk(bm25_index, "body", ["alpha", "beta"], 2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[.*(In|EqualTo)\(block_no", plan), plan
+
+
 # ------------------------------------------- BM25-only build (no native)
 
 def test_bm25_only_build_skips_native_postings(spark, tmp_root):
@@ -502,11 +591,15 @@ def test_bm25_field_with_no_token_rows_builds_empty(spark, tmp_root):
         fields=(FieldConfig("tag", bm25=True, native_postings=False),)
     )
     df = spark.createDataFrame([(0, "en"), (1, "de")], "doc_id long, tag string")
-    idx = build_index(
-        spark, df, cfg, os.path.join(tmp_root, "bm25_empty_field"), resume=False
-    )
+    out = os.path.join(tmp_root, "bm25_empty_field")
+    idx = build_index(spark, df, cfg, out, resume=False)
     assert bm25_topk(idx, "tag", ["en"], 5).count() == 0
     assert bm25_batch_topk(idx, "tag", {"q": ["en"]}, 5).count() == 0
+    # the empty table has no schema to check the layout by: resume keeps it
+    marker = os.path.join(out, "bm25", "_SUCCESS")
+    mtime = os.path.getmtime(marker)
+    build_index(spark, df, cfg, out, resume=True)
+    assert os.path.getmtime(marker) == mtime
 
 
 # ----------------------------------------------------------- filtered path

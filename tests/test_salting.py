@@ -49,11 +49,12 @@ def salted_and_plain(spark, tmp_root):
 
 def _blocks_rows(index):
     df = index.postings_blocks("text").select(
-        "term_id", "block_no", "n_docs", "max_score", "min_doc_id", "max_doc_id", "data"
+        "term_id", "block_no", "n_docs", "max_score", "min_doc_id", "max_doc_id",
+        "doc_ids", "scores",
     )
     return sorted(
         (r.term_id, r.block_no, r.n_docs, r.max_score, r.min_doc_id,
-         r.max_doc_id, bytes(r.data))
+         r.max_doc_id, tuple(r.doc_ids), tuple(r.scores))
         for r in df.collect()
     )
 

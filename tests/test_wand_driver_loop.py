@@ -43,7 +43,7 @@ def test_stops_when_threshold_beats_remaining():
     rows = _ubs(100, 90, 10, 5)
     exact = _exact_from(true, k=2)
     res, decoded = wand_driver_loop(
-        rows, False, 2, exact, lambda r: r["score"], start_blocks=2
+        rows, 2, exact, lambda r: r["score"], start_blocks=2
     )
     assert [r["score"] for r in res] == [100, 90]
     assert decoded == 2
@@ -57,7 +57,7 @@ def test_certificate_caps_growth():
     rows = _ubs(*[1000 - i for i in range(40)])
     exact = _exact_from(true, k=8)
     res, decoded = wand_driver_loop(
-        rows, False, 8, exact, lambda r: r["score"], start_blocks=2
+        rows, 8, exact, lambda r: r["score"], start_blocks=2
     )
     assert res is not None
     # decode windows only ever grow along the desc-sorted prefix
@@ -76,22 +76,22 @@ def test_all_blocks_decoded_returns_without_bound():
     rows = _ubs(5, 3)
     exact = _exact_from(true, k=10)
     res, decoded = wand_driver_loop(
-        rows, False, 10, exact, lambda r: r["score"], start_blocks=8
+        rows, 10, exact, lambda r: r["score"], start_blocks=8
     )
     assert [r["score"] for r in res] == [5, 3]
     assert decoded == 2
 
 
 def test_truncated_window_forces_fallback():
-    # window truncated at 4 rows and every collected ub ties the kth
-    # score -> the true certificate count is unknowable from the window;
-    # the loop must hand back (None, None) for the full-decode fallback
+    # window truncated at max_inlist + 1 = 4 rows and every collected
+    # ub ties the kth score -> the true certificate count is unknowable
+    # from the window; the loop must hand back (None, None) for the
+    # full-decode fallback
     true = {i: 50 for i in range(4)}
     rows = _ubs(50, 50, 50, 50)
     exact = _exact_from(true, k=3)
     res, decoded = wand_driver_loop(
         rows,
-        True,  # truncated
         3,
         exact,
         lambda r: r["score"],
@@ -107,7 +107,7 @@ def test_underfull_topk_grows_geometrically():
     rows = _ubs(*[100 - i for i in range(20)])
     exact = _exact_from(true, k=6)
     res, _ = wand_driver_loop(
-        rows, False, 6, exact, lambda r: r["score"], start_blocks=1
+        rows, 6, exact, lambda r: r["score"], start_blocks=1
     )
     assert res is not None
     assert [len(c) for c in exact.calls][:2] == [1, 4]
@@ -121,7 +121,7 @@ def test_quantize_ties_continue():
     rows = _ubs(100.0, 90.00004, 90.00001, 1.0)
     exact = _exact_from(true, k=2)
     res, decoded = wand_driver_loop(
-        rows, False, 2, exact, lambda r: r["score"], start_blocks=2, quantize=q
+        rows, 2, exact, lambda r: r["score"], start_blocks=2, quantize=q
     )
     assert res is not None
     # the loop must have decoded past the tied block before returning
@@ -134,7 +134,7 @@ def test_budget_exhaustion_returns_none():
     rows = _ubs(*[10] * 100)
     exact = _exact_from(true, k=50)
     res, decoded = wand_driver_loop(
-        rows, False, 50, exact, lambda r: r["score"], start_blocks=1, max_iters=2
+        rows, 50, exact, lambda r: r["score"], start_blocks=1, max_iters=2
     )
     assert res is None and decoded is None
 

@@ -3,8 +3,9 @@
 A from-scratch rebuild of the query/data-processing capabilities of
 PSeitz/veloci (reference at /root/reference, Rust) on idiomatic Spark:
 DataFrame transforms for the index-build dataflow, vectorized
-pandas/Arrow UDFs for the tokenizer and the posting-block codec, and
-Catalyst-optimized joins/aggregations for query execution.
+pandas/Arrow UDFs for the tokenizer, posting blocks stored as Parquet
+v2 long arrays and decoded by the JVM scan, and Catalyst-optimized
+joins/aggregations for query execution.
 
 Nothing in here is a translation of the reference's execution engine;
 only its *semantics* (tokenization, score formulas, set-op scoring,

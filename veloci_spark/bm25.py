@@ -8,9 +8,9 @@ Arrow-batched operators" next to the reference-faithful veloci scoring
 graded against the textbook Okapi/Lucene formula, not reference code).
 
 Design: BM25 per-posting scores are **baked at build time** and stored in
-the same delta+varint doc-aligned blocks (codec.py) as the native
-postings, with per-block max metadata.  This works because every BM25
-input is known at build time:
+the same doc-aligned ``doc_ids``/``scores`` array blocks
+(build._encode_blocks) as the native postings, with per-block max
+metadata.  This works because every BM25 input is known at build time:
 
     idf(t)       = ln((N - df + 0.5) / (df + 0.5) + 1)      # Lucene +1
     tf_part(t,d) = tf * (k1+1) / (tf + k1 * (1-b + b*dl/avgdl))
@@ -21,7 +21,7 @@ input is known at build time:
 Scores are quantized to integers (``score_e4 = floor(s*1e4 + 0.5)``)
 before encoding, so
 
-- the codec stores ints, exactly like native postings;
+- the blocks store ints, exactly like native postings;
 - a multi-term query score is an INTEGER sum of per-term entries —
   engine, WAND path, and the DuckDB oracle agree bit-for-bit with no
   float-association ambiguity;
@@ -32,8 +32,8 @@ Scale shape: tf is one groupBy (map-side combined), df a map-side-
 combined groupBy joined back (skew-splittable — see bm25_from_tf), dl
 one groupBy;
 block encode reuses build._encode_blocks (one hash shuffle, doc-aligned
-blocks bound stop-word skew).  Query-side decode is the same
-numpy-in-Arrow pass as native postings; no per-row Python anywhere.
+blocks bound stop-word skew).  Query-side decode is the same JVM
+generator over the block arrays as native postings; no Python worker.
 """
 
 from __future__ import annotations
@@ -406,10 +406,12 @@ def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFr
     (executor._attach_explain): one row per (top-k doc, matched term)
     with the term's integer contribution and the doc's total.
 
-    Scale shape: the top-k doc ids (bounded by k) are pushed as a literal
-    IN into the decoded-posting scan, and the (tiny) dictionary slice for
-    the query terms is broadcast — no extra shuffle beyond the top-k
-    aggregation itself."""
+    Scale shape: blocks are doc-aligned, so the top-k doc ids (bounded
+    by k) pin a literal ``block_no IN`` that cuts the per-term block scan
+    to the top-k docs' blocks BEFORE decode, and a literal doc_id IN
+    keeps their rows after it; the (tiny) dictionary slice for the query
+    terms is broadcast — no extra shuffle beyond the top-k aggregation
+    itself."""
     from veloci_spark.index import decode_blocks_df
 
     spark = index.spark
@@ -426,9 +428,13 @@ def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFr
     names = index.dictionary(field).where(F.col("term_id").isin(ids)).select(
         "term_id", "term"
     )
-    flat = decode_blocks_df(_term_blocks(index, field, ids))
+    doc_ids = [r["doc_id"] for r in top_rows]
+    blocks = sorted({d // index.block_docs for d in doc_ids})
+    flat = decode_blocks_df(
+        _term_blocks(index, field, ids).where(F.col("block_no").isin(blocks))
+    )
     per_term = (
-        flat.where(F.col("doc_id").isin([r["doc_id"] for r in top_rows]))
+        flat.where(F.col("doc_id").isin(doc_ids))
         .join(F.broadcast(names), "term_id")
         .join(F.broadcast(totals), "doc_id")
         .select(

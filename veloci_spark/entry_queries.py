@@ -121,7 +121,7 @@ _register(
 )
 
 
-# ---- posting lists for one term (validates scores + the binary codec) ------
+# ---- posting lists for one term (validates scores + the block arrays) ------
 
 def _q_postings(spark, sf_dir):
     idx = documents_index(spark, sf_dir)

@@ -12,14 +12,8 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from veloci_spark.codec import decode_block
-
-FLAT_SCHEMA = "term_id long, doc_id long, score long"
 
 
 class LeafLru:
@@ -98,7 +92,8 @@ class LeafLru:
 
 
 class Index:
-    """Unified v2 layout: one table per index kind at the root, written
+    """Unified layout (manifest version 3: posting blocks as ``doc_ids``/
+    ``scores`` arrays): one table per index kind at the root, written
     ``partitionBy("field")`` — a per-field read is a partition-pruned scan
     (the directory filter never touches other fields' data), while the
     build shares one shuffle across all fields."""
@@ -108,9 +103,14 @@ class Index:
         self.path = path
         with open(os.path.join(path, "manifest.json")) as f:
             self.manifest = json.load(f)
-        if self.manifest.get("version", 1) < 2:
+        version = self.manifest.get("version", 1)
+        if version < 2:
             raise ValueError(
                 f"index at {path} uses the round-1 per-field layout; rebuild"
+            )
+        if version < 3:
+            raise ValueError(
+                f"index at {path} stores varint posting blocks; rebuild"
             )
         self.block_docs: int = self.manifest["block_docs"]
         self._cache: dict[str, DataFrame] = {}
@@ -170,7 +170,7 @@ class Index:
         return self._field_slice("phrase", field)
 
     def bm25_blocks(self, field: str) -> DataFrame:
-        """Baked-BM25 posting blocks (same codec/layout as postings;
+        """Baked-BM25 posting blocks (same array layout as postings;
         scores are e4-quantized BM25 ints — see bm25.py)."""
         return self._field_slice("bm25", field)
 
@@ -209,7 +209,8 @@ class Index:
         "token_values": "term_id long, value double, field string",
         "bm25": (
             "term_id long, block_no long, n_docs long, max_score long, "
-            "min_doc_id long, max_doc_id long, data binary, field string"
+            "min_doc_id long, max_doc_id long, doc_ids array<long>, "
+            "scores array<long>, field string"
         ),
     }
 
@@ -250,29 +251,11 @@ class Index:
 
 
 def decode_blocks_df(blocks: DataFrame) -> DataFrame:
-    """(term_id, ..., data) blocks → flat (term_id, doc_id, score) rows via
-    a numpy-vectorized Arrow pass."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            term_out = []
-            doc_out = []
-            score_out = []
-            for term_id, data in zip(pdf["term_id"].to_numpy(), pdf["data"]):
-                docs, scores = decode_block(data)
-                term_out.append(np.full(docs.size, term_id, dtype=np.int64))
-                doc_out.append(docs.astype(np.int64))
-                score_out.append(scores.astype(np.int64))
-            yield pd.DataFrame(
-                {
-                    "term_id": np.concatenate(term_out),
-                    "doc_id": np.concatenate(doc_out),
-                    "score": np.concatenate(score_out),
-                }
-            )
-
-    return blocks.select("term_id", "data").mapInPandas(_decode, schema=FLAT_SCHEMA)
+    """(term_id, ..., doc_ids, scores) blocks → flat (term_id, doc_id,
+    score) rows: a JVM generator over the block arrays, so the decode
+    runs in the scan's stage with no Python worker."""
+    return blocks.select(
+        "term_id", F.inline(F.arrays_zip("doc_ids", "scores"))
+    ).select(
+        "term_id", F.col("doc_ids").alias("doc_id"), F.col("scores").alias("score")
+    )

@@ -98,7 +98,6 @@ def collect_block_ubs(
 
 def wand_driver_loop(
     ub_rows: list,
-    truncated: bool,
     k: int,
     exact_fn,
     score_of,
@@ -119,6 +118,10 @@ def wand_driver_loop(
     Returns ``(result_rows, decoded_blocks)`` or ``(None, None)`` when
     the caller must run its full-decode fallback (budget exhausted or
     certificate exceeds the collected window)."""
+    # a truncated window needs no flag: it holds max_inlist + 1 rows and
+    # m never passes max_inlist, so every candidate window leaves a row
+    # after it bounding all uncollected blocks, and a certificate that
+    # covers the whole window breaks to the fallback
     q = quantize if quantize is not None else (lambda x: x)
     m = start_blocks
     for _ in range(max_iters):
@@ -203,7 +206,6 @@ def blockmax_topk(
             n_total = block_ub.count()
         rows, decoded = wand_driver_loop(
             ub_rows,
-            truncated,
             k,
             exact_fn,
             score_of,
@@ -288,7 +290,7 @@ def wand_or_topk(
         hit_frames = []
         for field, terms, blocks in block_frames:
             sel = candidate_block_filter(blocks, cand_ids, spark)
-            flat = decode_blocks_df(sel.select("term_id", "data"))
+            flat = decode_blocks_df(sel)
             joined = flat.join(
                 F.broadcast(terms.select("term_id", "term_score", "slot")), "term_id"
             )
