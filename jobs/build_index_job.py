@@ -58,7 +58,6 @@ def main() -> None:
     ap.add_argument("--block-docs", type=int, default=65536)
     ap.add_argument("--phrase", action="store_true", help="build phrase-pair index")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--tokenizer", default="pandas", choices=["pandas", "jvm"])
     args = ap.parse_args()
 
     spark = SparkSession.builder.appName("veloci-spark-build").getOrCreate()
@@ -102,14 +101,7 @@ def main() -> None:
         key_cols=tuple(c for c in args.key_cols.split(",") if c),
         block_docs=args.block_docs,
     )
-    build_index(
-        spark,
-        corpus,
-        cfg,
-        args.output,
-        resume=not args.no_resume,
-        tokenizer=args.tokenizer,
-    )
+    build_index(spark, corpus, cfg, args.output, resume=not args.no_resume)
     spark.stop()
 
 

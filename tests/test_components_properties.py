@@ -100,6 +100,43 @@ def test_label_propagation_long_chain(spark):
     assert got == {i: 0 for i in range(31)}
 
 
+def test_dedup_components_raises_when_rounds_run_out(spark):
+    """The engine's own loop: a near-dup chain (each doc a 20-word window
+    shifted 4 words from the last, so neighbours have word-3-shingle
+    Jaccard 14/22 >= 0.5 and docs two apart 10/26 < 0.5) needs more
+    rounds than max_rounds=1 — it must raise, not return split
+    clusters; with the default cap it converges to union-find."""
+    from veloci_spark.pipeline.dedup import (
+        TAU_COMPONENTS_E4,
+        dedup_components,
+        dedup_minhash_lsh,
+    )
+
+    words = [f"w{i}" for i in range(60)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[4 * i : 4 * i + 20])) for i in range(8)],
+        "doc_id long, text string",
+    )
+    mh = dedup_minhash_lsh(spark, "", docs=docs)
+    edges = [
+        (r["doc_a"], r["doc_b"])
+        for r in mh.where(F.col("jaccard_e4") >= TAU_COMPONENTS_E4).collect()
+    ]
+    mh._veloci_unpersist()
+    # only neighbours are near-dups, and the chain has a path of >= 2
+    # edges, so one round cannot settle every label
+    assert all(abs(a - b) == 1 for a, b in edges)
+    nodes = [n for e in edges for n in e]
+    assert any(nodes.count(n) >= 2 for n in nodes)
+
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        dedup_components(spark, "", max_rounds=1, docs=docs)
+    got = dedup_components(spark, "", docs=docs).collect()
+    assert {r["doc_id"]: r["component_id"] for r in got} == _brute_components(
+        edges
+    )
+
+
 # ------------------------------------------------------- phrase matching
 
 WORDS = ["red", "blue", "green", "fast", "slow", "join", "scan"]

@@ -84,17 +84,6 @@ def test_jvm_tokenizer_matches_python(spark):
         assert row[0] == toks(text), text
 
 
-def test_pandas_tokenizer_matches_python(spark):
-    from veloci_spark.tokenize import tokenize_pandas_udf
-
-    texts = [("das ist ein test",), ("function myfun(param1: Type1)",)]
-    df = spark.createDataFrame(texts, "text string")
-    udf = tokenize_pandas_udf()
-    rows = df.select(udf("text")).collect()
-    for (text,), row in zip(texts, rows):
-        assert row[0] == toks(text)
-
-
 # ---------------------------------------------------------------------------
 # Ungrouped SimpleTokenizer variant + query-side normalize_text (round 2)
 # ---------------------------------------------------------------------------

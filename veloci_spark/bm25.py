@@ -115,32 +115,6 @@ def py_bm25_e4(tf: int, df: int, dl: int, n_docs: int, avgdl: float) -> int:
 
 # ----------------------------- build helpers -----------------------------
 
-def bm25_flat_postings(
-    toks: DataFrame,
-    dictionary: DataFrame,
-    bm25_fields: Sequence[str],
-) -> tuple[DataFrame, dict[str, dict]]:
-    """(field, term_id, doc_id, score[bm25 e4 int]) over ``bm25_fields``
-    plus per-field corpus stats {field: {n_docs, avgdl}}.
-
-    One groupBy for tf, a map-side-combined groupBy+join-back for df,
-    one groupBy for doc lengths, one join back on (field, doc_id).  The
-    stats collect is per-field tiny.
-    """
-    nonsep = (
-        toks.where(F.col("field").isin(*list(bm25_fields)))
-        .where(~F.col("is_sep"))
-        .select("field", "doc_id", "tok")
-    )
-    dict_for_tok = dictionary.select("field", F.col("term").alias("tok"), "term_id")
-    tf = (
-        nonsep.join(dict_for_tok, ["field", "tok"])
-        .groupBy("field", "term_id", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    return bm25_from_tf(tf)
-
-
 def bm25_from_tf(tf: DataFrame) -> tuple[DataFrame, dict[str, dict]]:
     """BM25 scores + corpus stats from a precomputed ``(field, term_id,
     doc_id, tf)`` frame (tf = non-separator occurrence count, tf >= 1).

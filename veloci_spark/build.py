@@ -59,13 +59,7 @@ from veloci_spark.scoring import (
     merge_posting_scores,
     token_score_expr,
 )
-from veloci_spark.tokenize import (
-    has_tokens_expr,
-    is_separator_expr,
-    run_pattern,
-    tokenize_expr,
-    tokenize_pandas_udf,
-)
+from veloci_spark.tokenize import has_tokens_expr, run_pattern, tokenize_expr
 
 
 def _done(path: str) -> bool:
@@ -152,93 +146,6 @@ def _field_values(
     for fr in frames[1:]:
         out = out.unionAll(fr)
     return out
-
-
-def _tokenized_runs(
-    values: DataFrame, fields: Sequence[FieldConfig], tokenizer: str
-) -> Optional[DataFrame]:
-    """(field, doc_id, ordkey, num_tokens, runs array<struct<tok,
-    is_sep>>) over all tokenizable fields — the PRE-EXPLODE tokenizer
-    output, one row per text value (corpus-sized, not
-    exploded-token-sized).  Feeds the array-side phrase-pair build and,
-    via _explode_runs, the jvm-tokenizer stats derivation.
-
-    Positions count every run, separator groups included, and separator
-    runs are themselves indexed (/root/reference/src/create.rs:240-283).
-    Only texts with >= 2 runs produce token rows (`has_tokens`,
-    /root/reference/src/create.rs:225-227). num_tokens is the run count
-    of the VALUE (per-value text-length norm, calculate_score.rs:6-31).
-
-    Fields are grouped by tokenizer config so each distinct
-    (separators, grouped) pair costs one expression over its subset —
-    typically all fields share the default config and the whole corpus
-    tokenizes in a single pass.
-    """
-    groups: dict[tuple, list[str]] = {}
-    for fc in fields:
-        if not fc.tokenize:
-            continue
-        key = (fc.separators(), fc.tokenizer_grouped)
-        groups.setdefault(key, []).append(fc.name)
-    if not groups:
-        return None
-    frames = []
-    for (seps, grouped), names in groups.items():
-        subset = values.where(F.col("field").isin(*names))
-        if tokenizer == "pandas":
-            runs = tokenize_pandas_udf(seps, grouped)(F.col("text"))
-        else:
-            runs = tokenize_expr("text", seps, grouped)
-        df = (
-            subset.withColumn("__runs", runs)
-            .where(has_tokens_expr(F.col("__runs")))
-            .select(
-                "field",
-                "doc_id",
-                "ordkey",
-                F.size("__runs").alias("num_tokens"),
-                F.transform(
-                    "__runs",
-                    lambda t: F.struct(
-                        t.alias("tok"),
-                        is_separator_expr(t, seps).alias("is_sep"),
-                    ),
-                ).alias("runs"),
-            )
-        )
-        frames.append(df)
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionAll(fr)
-    return out
-
-
-def _explode_runs(runs_df: DataFrame) -> DataFrame:
-    """runs frame → (field, doc_id, ordkey, num_tokens, pos, tok,
-    is_sep): one row per token run, the shape the build stages consume."""
-    return runs_df.select(
-        "field",
-        "doc_id",
-        "ordkey",
-        "num_tokens",
-        F.posexplode("runs").alias("pos", "__r"),
-    ).select(
-        "field",
-        "doc_id",
-        "ordkey",
-        "num_tokens",
-        "pos",
-        F.col("__r.tok").alias("tok"),
-        F.col("__r.is_sep").alias("is_sep"),
-    )
-
-
-def _tokenized(
-    values: DataFrame, fields: Sequence[FieldConfig], tokenizer: str
-) -> Optional[DataFrame]:
-    """Exploded token stream (see _tokenized_runs/_explode_runs)."""
-    runs_df = _tokenized_runs(values, fields, tokenizer)
-    return None if runs_df is None else _explode_runs(runs_df)
 
 
 _STATS_SCHEMA = (
@@ -377,62 +284,47 @@ def _token_stats_map(
 def _value_token_stats(
     values: DataFrame,
     fields: Sequence[FieldConfig],
-    tokenizer: str,
     pair_fields: frozenset = frozenset(),
 ) -> Optional[DataFrame]:
     """(field, doc_id, ordkey, num_tokens, tok, best_pos, cnt_all,
     cnt_nonsep, tok2): one row per DISTINCT (text value, token run
-    string) with ``tok2`` null, plus — pandas tokenizer only, for fields
-    in ``pair_fields`` — one row per distinct adjacent non-separator
-    pair per value (``tok2`` set, stats columns zero placeholders).
+    string) with ``tok2`` null, plus — for fields in ``pair_fields`` —
+    one row per distinct adjacent non-separator pair per value (``tok2``
+    set, stats columns zero placeholders).
 
     best_pos is the first run index (separator runs counted), cnt_all
     the run occurrence count (what dictionary num_occurences sums),
     cnt_nonsep the non-separator occurrence count (the BM25 tf
-    contribution).  pandas tokenizer: fused Arrow pass (see
-    _token_stats_map); jvm tokenizer: derived from the exploded stream
-    by an equivalent groupBy (bit-identical, asserted in
-    tests/test_token_stats.py); jvm phrase pairs come from the window
-    path instead."""
-    if tokenizer == "pandas":
-        groups: dict[tuple, list[str]] = {}
-        for fc in fields:
-            if not fc.tokenize:
-                continue
-            key = (fc.separators(), fc.tokenizer_grouped)
-            groups.setdefault(key, []).append(fc.name)
-        if not groups:
-            return None
-        frames = []
-        for (seps, grouped), names in groups.items():
-            subset = values.where(F.col("field").isin(*names)).select(
-                "field", "doc_id", "ordkey", "text"
-            )
-            frames.append(
-                subset.mapInPandas(
-                    _token_stats_map(
-                        seps, grouped, pair_fields & frozenset(names)
-                    ),
-                    schema=_STATS_SCHEMA,
-                )
-            )
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionAll(fr)
-        return out
-    toks = _tokenized(values, fields, tokenizer)
-    if toks is None:
+    contribution), num_tokens the VALUE's run count (per-value length
+    norm, calculate_score.rs:6-31).  Only values with >= 2 runs produce
+    rows (`has_tokens`, reference src/create.rs:225-227).
+    Computed by the fused Arrow pass
+    (:func:`_token_stats_map`), one ``mapInPandas`` per distinct
+    (separators, grouped) tokenizer config — typically all fields share
+    the default config and the corpus tokenizes in a single pass."""
+    groups: dict[tuple, list[str]] = {}
+    for fc in fields:
+        if not fc.tokenize:
+            continue
+        key = (fc.separators(), fc.tokenizer_grouped)
+        groups.setdefault(key, []).append(fc.name)
+    if not groups:
         return None
-    return toks.groupBy("field", "doc_id", "ordkey", "tok").agg(
-        F.first("num_tokens").alias("num_tokens"),
-        F.min("pos").alias("best_pos"),
-        F.count("*").alias("cnt_all"),
-        F.sum(F.when(F.col("is_sep"), 0).otherwise(1)).alias("cnt_nonsep"),
-    ).select(
-        "field", "doc_id", "ordkey", "num_tokens", "tok",
-        "best_pos", "cnt_all", "cnt_nonsep",
-        F.lit(None).cast("string").alias("tok2"),
-    )
+    frames = []
+    for (seps, grouped), names in groups.items():
+        subset = values.where(F.col("field").isin(*names)).select(
+            "field", "doc_id", "ordkey", "text"
+        )
+        frames.append(
+            subset.mapInPandas(
+                _token_stats_map(seps, grouped, pair_fields & frozenset(names)),
+                schema=_STATS_SCHEMA,
+            )
+        )
+    out = frames[0]
+    for fr in frames[1:]:
+        out = out.unionAll(fr)
+    return out
 
 
 def _split_stats_pairs(
@@ -753,68 +645,32 @@ def _blocks_done(spark: SparkSession, path: str) -> bool:
         return True
 
 
-def _build_phrase_pairs(
-    pairs_src: Optional[DataFrame],
-    runs_df: Optional[DataFrame],
-    dictionary: DataFrame,
-    phrase_fields: Sequence[str],
-    tokenizer: str,
-) -> DataFrame:
+def _build_phrase_pairs(pairs_src: DataFrame, dictionary: DataFrame) -> DataFrame:
     """(field, term_id_1, term_id_2, doc_id) for adjacent non-separator
     tokens. The pair chain is PER TEXT VALUE — the reference resets
     prev_token at each cb_text call (/root/reference/src/create.rs:251-263)
     — and separator runs are skipped; sorted-dedup like the reference's
     sort_and_dedup merge (/root/reference/src/create.rs:349-363).
 
-    pandas tokenizer: ``pairs_src`` arrives value-deduped from the SAME
-    fused Arrow pass that produced the token stats (zero extra tokenize
-    passes, no occurrence-stream window shuffle); the remaining shuffles
-    are the two dictionary joins and the final doc-level distinct over
-    already value-deduped pairs.  jvm tokenizer: the classic lead()
-    window over the exploded ``runs_df`` stream."""
-    if tokenizer == "pandas":
-        assert pairs_src is not None
-        ex = pairs_src
-        d1 = dictionary.select(
-            "field",
-            F.col("term").alias("__tok1"),
-            F.col("term_id").alias("term_id_1"),
-        )
-        d2 = dictionary.select(
-            "field",
-            F.col("term").alias("__tok2"),
-            F.col("term_id").alias("term_id_2"),
-        )
-        return (
-            ex.join(d1, ["field", "__tok1"])
-            .join(d2, ["field", "__tok2"])
-            .select("field", "term_id_1", "term_id_2", "doc_id")
-            .distinct()
-        )
-
-    from pyspark.sql.window import Window
-
-    assert runs_df is not None
-    toks = _explode_runs(runs_df)
-    dict_for_tok = dictionary.select(
-        "field", F.col("term").alias("tok"), "term_id"
+    ``pairs_src`` arrives value-deduped from the SAME fused Arrow pass
+    that produced the token stats (zero extra tokenize passes, no
+    occurrence-stream window shuffle); the remaining shuffles are the two
+    dictionary joins and the final doc-level distinct over already
+    value-deduped pairs."""
+    d1 = dictionary.select(
+        "field",
+        F.col("term").alias("__tok1"),
+        F.col("term_id").alias("term_id_1"),
     )
-    nonsep = (
-        toks.where(F.col("field").isin(*list(phrase_fields)))
-        .where(~F.col("is_sep"))
-        .join(dict_for_tok, ["field", "tok"])
+    d2 = dictionary.select(
+        "field",
+        F.col("term").alias("__tok2"),
+        F.col("term_id").alias("term_id_2"),
     )
-    w = Window.partitionBy("field", "doc_id", "ordkey").orderBy("pos")
     return (
-        nonsep.select("field", "doc_id", "ordkey", "pos", "term_id")
-        .withColumn("term_id_2", F.lead("term_id").over(w))
-        .where(F.col("term_id_2").isNotNull())
-        .select(
-            "field",
-            F.col("term_id").alias("term_id_1"),
-            F.col("term_id_2"),
-            "doc_id",
-        )
+        pairs_src.join(d1, ["field", "__tok1"])
+        .join(d2, ["field", "__tok2"])
+        .select("field", "term_id_1", "term_id_2", "doc_id")
         .distinct()
     )
 
@@ -926,7 +782,6 @@ def build_index(
     config: IndexConfig,
     out_dir: str,
     resume: bool = True,
-    tokenizer: str = "pandas",
 ) -> Index:
     """Build (or resume building) the full index under ``out_dir``."""
     os.makedirs(out_dir, exist_ok=True)
@@ -978,29 +833,21 @@ def build_index(
     need_texts = bool(text_fields) and not (resume and _done(texts_path))
     need_bm25 = bool(bm25_fields) and not (resume and _blocks_done(spark, bm25_path))
 
-    runs_df: Optional[DataFrame] = None
     if need_dict or need_post or need_phrase or need_texts or need_bm25:
         values = _field_values(corpus_ids, fields)
         whole = _whole_texts(values, fields)
         # per-(value, token) stats (+ phrase pairs) — ONE fused
         # tokenize+aggregate pass feeds the dictionary counts, the
-        # posting/BM25 value aggregate AND (pandas tokenizer) the
-        # phrase-pair rows; persisted to executor-local disk when more
-        # than one consumer is live, so the corpus is tokenized exactly
-        # once per build
+        # posting/BM25 value aggregate AND the phrase-pair rows;
+        # persisted to executor-local disk when more than one consumer
+        # is live, so the corpus is tokenized exactly once per build
         stats: Optional[DataFrame] = None
         pairs_src: Optional[DataFrame] = None
         stats_persisted = False
         post_needs_va = need_post and bool(native_tok_fields)
-        pair_fields = (
-            frozenset(phrase_fields)
-            if (need_phrase and tokenizer == "pandas")
-            else frozenset()
-        )
+        pair_fields = frozenset(phrase_fields) if need_phrase else frozenset()
         if need_dict or post_needs_va or need_bm25 or pair_fields:
-            stats_full = _value_token_stats(
-                values, fields, tokenizer, pair_fields
-            )
+            stats_full = _value_token_stats(values, fields, pair_fields)
             n_consumers = sum(
                 (need_dict, post_needs_va or need_bm25, bool(pair_fields))
             )
@@ -1010,10 +857,6 @@ def build_index(
                 stats_full = stats_full.persist(StorageLevel.DISK_ONLY)
                 stats_persisted = True
             stats, pairs_src = _split_stats_pairs(stats_full)
-        # the pre-explode runs frame feeds only the jvm-tokenizer
-        # phrase-pair fallback
-        if need_phrase and tokenizer != "pandas":
-            runs_df = _tokenized_runs(values, fields, tokenizer)
 
         if need_dict:
             t0 = time.time()
@@ -1068,9 +911,8 @@ def build_index(
 
         if need_phrase:
             t0 = time.time()
-            pairs = _build_phrase_pairs(
-                pairs_src, runs_df, dictionary, phrase_fields, tokenizer
-            )
+            assert pairs_src is not None
+            pairs = _build_phrase_pairs(pairs_src, dictionary)
             (
                 pairs.repartition("field", "term_id_1")
                 .sortWithinPartitions("field", "term_id_1", "term_id_2", "doc_id")

@@ -10,6 +10,8 @@ Cross-engine determinism rules (same as the fulltext oracle):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, functions as F
 
 from veloci_spark.config import DEFAULT_SEPARATORS
@@ -100,14 +102,13 @@ def sql_shingles(words: str, n: int) -> str:
 #: single-row-group parquet files, so `maxPartitionBytes` cannot split
 #: them).  Production-size inputs (>> this) are left untouched: blindly
 #: repartitioning a 100 TB scan would add a full shuffle of the corpus.
-FAN_OUT_MAX_BYTES = int(
-    __import__("os").environ.get("VELOCI_SPARK_FANOUT_MAX_BYTES", 256 * 1024 * 1024)
-)
+FAN_OUT_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _path_bytes(path: str) -> int:
-    import os
-
+def _path_bytes(path: str, stop_above: int) -> int:
+    """Bytes under ``path``; the walk stops as soon as the running total
+    passes ``stop_above``, so a huge input tree costs O(1) stat calls,
+    not one per file."""
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
@@ -117,6 +118,8 @@ def _path_bytes(path: str) -> int:
                 total += os.path.getsize(os.path.join(root, f))
             except OSError:
                 pass
+            if total > stop_above:
+                return total
     return total
 
 
@@ -125,8 +128,6 @@ def _scan_units(path: str) -> int:
     file into byte ranges, but a range only yields rows when a ROW GROUP
     midpoint falls inside it — a 6 MB single-row-group file scans as ONE
     task no matter the split config.  Footer-only reads; tiny inputs."""
-    import os
-
     import pyarrow.parquet as pq
 
     files = []
@@ -157,7 +158,10 @@ def read_fanned(spark, path: str):
     df = spark.read.parquet(path)
     n = spark.sparkContext.defaultParallelism
     try:
-        small = path.startswith("/") and _path_bytes(path) <= FAN_OUT_MAX_BYTES
+        small = (
+            path.startswith("/")
+            and _path_bytes(path, FAN_OUT_MAX_BYTES) <= FAN_OUT_MAX_BYTES
+        )
         # a source that already carries enough row groups parallelizes by
         # itself — repartitioning it is a pure extra shuffle
         needs = small and _scan_units(path) < n

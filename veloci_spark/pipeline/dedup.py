@@ -548,7 +548,10 @@ def dedup_components(
     scalar per round (the changed-label count); lineage is truncated
     with an eager localCheckpoint each round so plans stay O(1) deep.
     Only docs participating in >= 1 near-dup pair appear; everything
-    else is its own trivial component by definition.
+    else is its own trivial component by definition.  Raises
+    RuntimeError when labels still change after ``max_rounds`` rounds
+    (a graph whose diameter exceeds the cap), never returning a split
+    cluster.
     """
     mh = dedup_minhash_lsh(spark, sf_dir, docs=docs)
     pairs = (
@@ -588,6 +591,13 @@ def dedup_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        # labels still moving: returning them would split clusters
+        edges.unpersist()
+        raise RuntimeError(
+            f"dedup_components did not converge in max_rounds={max_rounds}: "
+            f"{changed} labels changed in the last round"
+        )
     edges.unpersist()
     return labels
 

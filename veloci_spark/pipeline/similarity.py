@@ -347,11 +347,13 @@ def _np_bucket_codes(X: "np.ndarray", n_bits: int) -> "np.ndarray":
     :func:`bucket_expr`: per-hyperplane dot as a sequential left-fold
     (cumsum) over float64 products of the SAME rounded-literal planes,
     then Σ 2^i over sign bits.  Bit-identical to the Catalyst HOF and
-    the oracle's generated SQL."""
-    planes = np.array(random_hyperplanes(n_bits), dtype=np.float64)
-    dots = np.cumsum(X[:, None, :] * planes[None, :, :], axis=2)[:, :, -1]
-    weights = (np.int64(1) << np.arange(n_bits, dtype=np.int64))
-    return ((dots >= 0.0) * weights).sum(axis=1).astype(np.int64)
+    the oracle's generated SQL.  One plane at a time, so the working set
+    is (m, dim), not (m, n_bits, dim)."""
+    codes = np.zeros(len(X), dtype=np.int64)
+    for i, plane in enumerate(random_hyperplanes(n_bits)):
+        dots = _np_fold(X * np.asarray(plane, dtype=np.float64))
+        codes += (dots >= 0.0).astype(np.int64) << i
+    return codes
 
 
 def _with_buckets_np(emb: DataFrame, n_bits: int) -> DataFrame:

@@ -77,10 +77,6 @@ def term_score_expr(distance: Column, prefix_matches: Column) -> Column:
     ).otherwise(F.lit(2.0) / (d + F.lit(0.2)))
 
 
-def hit_score_expr(term_score: Column, stored_score: Column) -> Column:
-    return term_score * (stored_score.cast("double") / F.lit(100.0))
-
-
 def score_e4(score: Column) -> Column:
     """Hash-stable integer quantization of a float score for correctness
     comparison across engines."""

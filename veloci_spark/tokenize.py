@@ -8,10 +8,13 @@ is-separator flag). `"das \n ist ein txt, test"` →
 `["das", " \n ", "ist", " ", "ein", " ", "txt", ", ", "test"]`.
 
 That partition is exactly the regex alternation `[^S]+|[S]+` over the
-separator class `S`, which lets us tokenize JVM-side with
-`regexp_extract_all` (whole-stage codegen, zero Python) — the default —
-or in an Arrow-vectorized pandas UDF (`tokenize_pandas_udf`) when a
-Python-side path is preferred. No per-row Python anywhere.
+separator class `S` (:func:`run_pattern`). The index build tokenizes
+with it in one Arrow-batched pass (`build._token_stats_map`, a
+vectorized `Series.str.findall` fused with the per-value token
+aggregate). The distinct-text tree edges (`build._build_texts`) use the
+same pattern JVM-side through `regexp_extract_all` (:func:`tokenize_expr`),
+and the query-side verify kernels through :func:`batch_run_tokenizer`.
+No per-row Python anywhere.
 
 Positions: the reference counts *every* run (separator runs included)
 when assigning token positions and the text-length norm
@@ -25,7 +28,6 @@ from __future__ import annotations
 import re
 from typing import Iterable, Iterator, Sequence
 
-import pandas as pd
 from pyspark.sql import Column, functions as F
 
 from veloci_spark.config import DEFAULT_SEPARATORS
@@ -68,7 +70,7 @@ def sep_class(separators: Sequence[str] = DEFAULT_SEPARATORS) -> str:
 
 
 # ---------------------------------------------------------------------------
-# JVM-side tokenization (default hot path: whole-stage codegen, no Python)
+# JVM-side tokenization (whole-stage codegen, no Python)
 # ---------------------------------------------------------------------------
 
 def tokenize_expr(
@@ -81,37 +83,10 @@ def tokenize_expr(
     return F.regexp_extract_all(c, F.lit(run_pattern(separators, grouped)), 0)
 
 
-def is_separator_expr(tok: Column, separators: Sequence[str] = DEFAULT_SEPARATORS) -> Column:
-    """True when a run is a separator group (its first char is a separator).
-    Implemented as isin over the separator set — a per-row regex here costs
-    more than the tokenize itself on large corpora."""
-    return F.substring(tok, 1, 1).isin(*separators)
-
-
 def has_tokens_expr(runs: Column) -> Column:
     """Reference `has_tokens`: the iterator yields >= 2 items
     (/root/reference/src/tokenizer/simple_tokenizer_group.rs:10-15)."""
     return F.size(runs) >= F.lit(2)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized pandas UDF variant (same semantics)
-# ---------------------------------------------------------------------------
-
-def tokenize_pandas_udf(
-    separators: Sequence[str] = DEFAULT_SEPARATORS, grouped: bool = True
-):
-    """Returns a pandas UDF string -> array<string> with identical output
-    to :func:`tokenize_expr` (Arrow batch transfer; vectorized
-    `Series.str.findall`, no per-row Python loops)."""
-    from pyspark.sql.types import ArrayType, StringType
-    pat = re.compile(run_pattern(separators, grouped))
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.fillna("").str.findall(pat)
-
-    return _tok
 
 
 # ---------------------------------------------------------------------------
