@@ -134,9 +134,9 @@ _DEMOTED = (
     "ft_nested_facet",          # facets∘nested; ft_facet_lang + ft_nested_search pin the factors
     "decontam_shuffle",         # plan variant of decontam_ngram (rule 1); shape pinned in tests
     "code_bm25_filtered",       # filter∘BM25; code_bm25_topk + ft_and_with_filter pin the factors
-    "code_bm25_filtered_wand",  # WAND variant of code_bm25_filtered (4 other WAND rows)
-    "code_bm25_and_wand",       # AND∘WAND; code_bm25_and + code_bm25_wand pin the factors
-    "code_bm25f_wand",          # WAND∘BM25F; code_bm25f_topk + code_bm25_wand pin the factors
+    "code_bm25_filtered_wand",  # same entry as code_bm25_filtered (rule-dispatched)
+    "code_bm25_and_wand",       # same entry as code_bm25_and (rule-dispatched)
+    "code_bm25f_wand",          # same entry as code_bm25f_topk (rule-dispatched)
     "ft_wand_topk",             # fulltext WAND; the code_* rows pin the same operator
     "ft_fuzzy_prefix",          # fuzzy ∘ prefix; both factors have their own rows
     "ft_topk_skip",             # pagination variant of the top-k every row exercises

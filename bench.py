@@ -254,8 +254,6 @@ def run_headline(sf_dir: str, cpus: int) -> dict:
     try:
         import hashlib
 
-        from veloci_spark.entry_queries import INDEX_CACHE_ROOT
-
         tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
         # the v2 path documents_index() resolves to — the build here must
         # land where the queries look, or they'd rebuild a second index
@@ -477,13 +475,23 @@ def run_scaling(
     }
 
 
+def _bm25_blockmax(idx, field: str, terms: list, k: int, stats: dict):
+    """The OR kind's block-max arm with the posting-volume rule forced
+    (bm25_auto_topk takes it only past bm25.WAND_MIN_POSTINGS); the
+    driver's ``blocks_total``/``blocks_decoded`` land in ``stats``."""
+    from veloci_spark import bm25
+
+    parts, _ = bm25._field_parts(idx, {field: 1}, terms)
+    return bm25._blockmax(parts, k, stats=stats)
+
+
 def run_query_scaling(sf_dir: str) -> dict:
     """Warm top-k latency vs corpus size: exhaustive OR vs block-max WAND
     on the native index, exhaustive vs WAND BM25 on the code index —
     evidence the pruned paths grow sublinearly with corpus size."""
     from pyspark.sql import functions as F
 
-    from veloci_spark.bm25 import bm25_topk, bm25_wand_topk
+    from veloci_spark.bm25 import bm25_topk
     from veloci_spark.build import build_index
     from veloci_spark.code_corpus import CODE_CONFIG, code_corpus
     from veloci_spark.entry_queries import DOC_CONFIG, _quantized_topk
@@ -525,8 +533,8 @@ def run_query_scaling(sf_dir: str) -> dict:
                 "bm25_exhaustive": lambda: bm25_topk(
                     code_idx, "content", terms, 20
                 ).collect(),
-                "bm25_wand": lambda: bm25_wand_topk(
-                    code_idx, "content", terms, 20, stats=bm25_stats
+                "bm25_wand": lambda: _bm25_blockmax(
+                    code_idx, "content", terms, 20, bm25_stats
                 ).collect(),
             }
             row = {}
@@ -676,7 +684,7 @@ def run_wand_pruning(n_docs: int = 200_000) -> dict:
     """Block-max pruning on a realistically skewed corpus: warm top-k
     latency + blocks decoded/total for exhaustive vs WAND, native OR and
     BM25, on the Zipf corpus where block maxima actually vary."""
-    from veloci_spark.bm25 import bm25_topk, bm25_wand_topk
+    from veloci_spark.bm25 import bm25_topk
     from veloci_spark.build import build_index
     from veloci_spark.config import FieldConfig, IndexConfig
     from veloci_spark.entry_queries import _quantized_topk
@@ -719,8 +727,8 @@ def run_wand_pruning(n_docs: int = 200_000) -> dict:
                 idx, or_node, k=20, stats=wand_stats
             ).collect(),
             "bm25_exhaustive": lambda: bm25_topk(idx, "text", terms, 20).collect(),
-            "bm25_wand": lambda: bm25_wand_topk(
-                idx, "text", terms, 20, stats=bm25_stats
+            "bm25_wand": lambda: _bm25_blockmax(
+                idx, "text", terms, 20, bm25_stats
             ).collect(),
         }
         row: dict = {}
@@ -757,7 +765,8 @@ def run_wand_crossover(sizes: Optional[list] = None) -> dict:
     Per rung: warm best-of-2 for bm25 exhaustive / wand / auto and
     native-OR exhaustive / wand, blocks decoded/total, the dispatch
     signal (matched posting volume), and rank-identity checks."""
-    from veloci_spark.bm25 import bm25_auto_topk, bm25_topk, bm25_wand_topk
+    from veloci_spark import bm25
+    from veloci_spark.bm25 import bm25_auto_topk, bm25_topk
     from veloci_spark.build import build_index
     from veloci_spark.config import FieldConfig, IndexConfig
     from veloci_spark.entry_queries import _quantized_topk
@@ -808,15 +817,12 @@ def run_wand_crossover(sizes: Optional[list] = None) -> dict:
             build_sec = round(time.time() - t0, 1)
             wand_stats: dict = {}
             bm25_stats: dict = {}
-            auto_stats: dict = {}
             thunks = {
                 "bm25_exhaustive": lambda: bm25_topk(idx, "text", terms, 20).collect(),
-                "bm25_wand": lambda: bm25_wand_topk(
-                    idx, "text", terms, 20, stats=bm25_stats
+                "bm25_wand": lambda: _bm25_blockmax(
+                    idx, "text", terms, 20, bm25_stats
                 ).collect(),
-                "bm25_auto": lambda: bm25_auto_topk(
-                    idx, "text", terms, 20, stats=auto_stats
-                ).collect(),
+                "bm25_auto": lambda: bm25_auto_topk(idx, "text", terms, 20).collect(),
             }
             if not bm25_only:
                 thunks["or_exhaustive"] = lambda: _quantized_topk(
@@ -857,8 +863,11 @@ def run_wand_crossover(sizes: Optional[list] = None) -> dict:
                 row["or_rank_identical"] = None
                 row["or_blocks"] = "-"
                 row["or_exhaustive"] = row["or_wand"] = None
-            row["auto_dispatch"] = auto_stats.get("dispatch")
-            row["matched_postings"] = auto_stats.get("matched_postings")
+            postings = bm25._field_parts(idx, {"text": 1}, terms)[1]
+            row["auto_dispatch"] = (
+                "wand" if postings >= bm25.WAND_MIN_POSTINGS else "exhaustive"
+            )
+            row["matched_postings"] = postings
             best_variant = min(row["bm25_exhaustive"], row["bm25_wand"])
             row["auto_vs_best"] = round(row["bm25_auto"] / best_variant, 2)
             out["rungs"][str(n)] = row

@@ -4,7 +4,7 @@
     spark-submit --py-files veloci_spark.zip jobs/query_job.py \
         --index s3://bucket/index/v1/ \
         --query 'myfun~1 AND filepath:src' \
-        --fields content --top 10 [--wand] [--select content,path]
+        --fields content --top 10 [--select content,path]
 """
 
 from __future__ import annotations
@@ -43,21 +43,17 @@ def main() -> None:
         action="store_true",
         help="print the engine plan DAG (graphviz dot) and exit",
     )
-    ap.add_argument("--wand", action="store_true", help="block-max pruned top-k path")
     ap.add_argument(
         "--bm25",
         choices=[
-            "or", "or-scan", "and", "or-wand", "and-wand", "phrase",
-            "near", "snippet", "fuzzy", "sigterms", "facets", "explain",
-            "batch",
-            "collapse", "mlt", "prf",
+            "or", "and", "phrase", "near", "snippet", "fuzzy", "sigterms",
+            "facets", "explain", "batch", "collapse", "mlt", "prf",
         ],
         default=None,
         help="BM25 top-k over the baked bm25 blocks (--query = space-"
-        "separated exact terms; 'or' = planner-dispatched default, "
-        "'or-scan' forces the exhaustive plan; "
-        "'and' = posting-list intersection; "
-        "'-wand' variants use block-max pruning; 'phrase' = exact "
+        "separated exact terms; 'or' = OR-sum, 'and' = posting-list "
+        "intersection, each exhaustive below a matched-posting volume "
+        "and block-max pruned above it; 'phrase' = exact "
         "adjacent-token phrase via pair-chain prune + positional verify; "
         "'explain' = per-term score provenance of the top-k; 'batch' = "
         "a whole query set in ONE job, --query is a JSON object "
@@ -148,15 +144,14 @@ def main() -> None:
         "--bm25f-weights",
         default=None,
         help="weighted multi-field BM25F, e.g. 'content=1,path=3' "
-        "(integer weights; overrides --fields; combine with --bm25 or/"
-        "or-wand for the exhaustive/pruned path)",
+        "(integer weights; overrides --fields; --bm25 or only)",
     )
     ap.add_argument(
         "--bm25-filter",
         default=None,
         help="SQL predicate over docstore columns (e.g. \"lang = 'rs'\") "
         "restricting BM25 results to matching docs; scores stay corpus-"
-        "level (filtered search). Supports --bm25 or / or-wand.",
+        "level (filtered search). --bm25 or only.",
     )
     ap.add_argument(
         "--suggest",
@@ -171,6 +166,15 @@ def main() -> None:
         "text values of ONE --fields entry, snippet-highlighted",
     )
     args = ap.parse_args()
+    # rejected before Spark starts: a negative skip would keep the LAST
+    # rows of the top+skip cut, a negative top fails inside Spark, and a
+    # one-term phrase has no adjacent pair to match
+    if args.skip < 0:
+        ap.error("--skip must be >= 0")
+    if args.top < 0:
+        ap.error("--top must be >= 0")
+    if args.bm25 == "phrase" and len(args.query.split()) < 2:
+        ap.error("--bm25 phrase needs >= 2 terms")
 
     spark = SparkSession.builder.appName("veloci-spark-query").getOrCreate()
     idx = Index(spark, args.index)
@@ -238,22 +242,15 @@ def main() -> None:
 
         terms = args.query.split()
         if args.bm25f_weights:
-            if args.bm25 not in ("or", "or-scan", "or-wand"):
-                ap.error(
-                    "--bm25f-weights supports --bm25 or / or-scan / or-wand only"
-                )
+            if args.bm25 != "or":
+                ap.error("--bm25f-weights supports --bm25 or only")
             weights = {}
             for part in args.bm25f_weights.split(","):
                 fld, _, w = part.partition("=")
                 weights[fld.strip()] = int(w or "1")
-            # "or" = the planner-dispatched default (same as the HTTP
-            # route); or-scan/or-wand force a plan
-            fn = {
-                "or": bm25.bm25f_auto_topk,
-                "or-scan": bm25.bm25f_topk,
-                "or-wand": bm25.bm25f_wand_topk,
-            }[args.bm25]
-            rows = fn(idx, weights, terms, args.top + args.skip).collect()
+            rows = bm25.bm25f_topk(
+                idx, weights, terms, args.top + args.skip
+            ).collect()
         elif args.bm25 == "batch":
             if not args.fields or len(args.fields.split(",")) != 1:
                 ap.error("--bm25 requires exactly one --fields entry")
@@ -347,28 +344,16 @@ def main() -> None:
             if not args.fields or len(args.fields.split(",")) != 1:
                 ap.error("--bm25 requires exactly one --fields entry")
             if args.bm25_filter:
-                if args.bm25 not in ("or", "or-wand"):
-                    ap.error("--bm25-filter supports --bm25 or / or-wand only")
-                fn = (
-                    bm25.bm25_filtered_wand_topk
-                    if args.bm25 == "or-wand"
-                    else bm25.bm25_filtered_topk
-                )
-                rows = fn(
+                if args.bm25 != "or":
+                    ap.error("--bm25-filter supports --bm25 or only")
+                rows = bm25.bm25_filtered_topk(
                     idx, args.fields, terms, args.top + args.skip,
                     args.bm25_filter,
                 ).collect()
             else:
                 fn = {
-                    # "or" dispatches through the planner rule
-                    # (exhaustive at every demonstrated scale, WAND past
-                    # the calibrated posting volume); or-scan forces the
-                    # exhaustive plan — mirrors the HTTP /bm25 modes
                     "or": bm25.bm25_auto_topk,
-                    "or-scan": bm25.bm25_topk,
                     "and": bm25.bm25_and_topk,
-                    "or-wand": bm25.bm25_wand_topk,
-                    "and-wand": bm25.bm25_and_wand_topk,
                     "phrase": bm25.bm25_phrase_topk,
                     "explain": bm25.bm25_explain_topk,
                     "prf": bm25.bm25_prf_topk,
@@ -399,41 +384,7 @@ def main() -> None:
         spark.stop()
         return
 
-    if args.wand:
-        from veloci_spark.request import OrNode, SearchPart
-        from veloci_spark.wand import wand_or_topk
-
-        # --wand implements ONLY the flat-OR scored path; anything that
-        # would alter or post-process scores must be rejected rather than
-        # silently dropped (a --wand --filter run returning unfiltered
-        # hits would be a wrong answer, not a slower one).
-        unsupported = []
-        if request.filter is not None:
-            unsupported.append("--filter")
-        if request.boost or request.boost_term or request.phrase_boosts:
-            unsupported.append("boosts")
-        if request.facets:
-            unsupported.append("--facets")
-        if request.text_locality:
-            unsupported.append("text_locality")
-        if unsupported:
-            ap.error(
-                "--wand supports plain OR term queries only; drop --wand or "
-                + ", ".join(unsupported)
-            )
-        node = request.search
-        flat_or = isinstance(node, SearchPart) or (
-            isinstance(node, OrNode)
-            and all(isinstance(p, SearchPart) for p in node.parts)
-        )
-        if not flat_or:
-            ap.error("--wand supports a flat OR of term leaves only (no AND/nesting)")
-        rows = wand_or_topk(idx, node, k=args.top + args.skip).collect()
-        rows = rows[args.skip:]
-    else:
-        rows = search(idx, request).hits.collect()
-
-    for r in rows:
+    for r in search(idx, request).hits.collect():
         print(json.dumps(r.asDict(), default=str))
     spark.stop()
 

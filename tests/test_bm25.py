@@ -20,10 +20,11 @@ from veloci_spark.bm25 import (
     K1,
     K1_PLUS_1,
     bm25_and_topk,
-    bm25_and_wand_topk,
+    bm25_auto_topk,
     bm25_batch_topk,
+    bm25_filtered_topk,
     bm25_topk,
-    bm25_wand_topk,
+    bm25f_topk,
     py_bm25,
     py_bm25_e4,
     py_idf,
@@ -135,14 +136,19 @@ def test_topk_sums_terms(bm25_index):
     assert got == want
 
 
+def _force_loop(monkeypatch, start_blocks=1, max_iters=8):
+    """Make every BM25 kind entry take its block-max arm."""
+    monkeypatch.setattr(bm25, "WAND_MIN_POSTINGS", 0)
+    monkeypatch.setattr(bm25, "WAND_START_BLOCKS", start_blocks)
+    monkeypatch.setattr(bm25, "WAND_MAX_ITERS", max_iters)
+
+
 @pytest.mark.parametrize("terms", [["alpha"], ["alpha", "gamma"], ["beta", "delta", "epsilon"]])
 @pytest.mark.parametrize("k", [2, 5])
 def test_wand_rank_identical(bm25_index, monkeypatch, terms, k):
-    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)  # run the loop
     exact = bm25_topk(bm25_index, "body", terms, k).collect()
-    wand = bm25_wand_topk(
-        bm25_index, "body", terms, k, start_blocks=1, max_iters=8
-    ).collect()
+    _force_loop(monkeypatch)
+    wand = bm25_auto_topk(bm25_index, "body", terms, k).collect()
     assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
@@ -168,11 +174,10 @@ def test_and_with_absent_term_is_empty(bm25_index):
 
 
 @pytest.mark.parametrize("terms", [["alpha", "gamma"], ["beta", "delta"]])
-def test_and_wand_rank_identical(bm25_index, terms):
+def test_and_wand_rank_identical(bm25_index, monkeypatch, terms):
     exact = bm25_and_topk(bm25_index, "body", terms, 5).collect()
-    wand = bm25_and_wand_topk(
-        bm25_index, "body", terms, 5, start_blocks=1, max_iters=8
-    ).collect()
+    _force_loop(monkeypatch)
+    wand = bm25_and_topk(bm25_index, "body", terms, 5).collect()
     assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
@@ -181,56 +186,16 @@ def test_wand_prunes_on_skewed_blocks(bm25_index, monkeypatch):
     # with k=1 the first decoded block's exact score strictly beats every
     # remaining block-max, so WAND must stop after ONE block of three
     stats: dict = {}
-    # the small-volume short-circuit would otherwise full-decode this
-    # tiny fixture
-    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)
-    rows = bm25_wand_topk(
-        bm25_index, "body", ["alpha"], 1, start_blocks=1, stats=stats
-    ).collect()
+    driver = bm25.blockmax_topk
+    monkeypatch.setattr(
+        bm25, "blockmax_topk", lambda *a, **kw: driver(*a, **{**kw, "stats": stats})
+    )
     exact = bm25_topk(bm25_index, "body", ["alpha"], 1).collect()
+    _force_loop(monkeypatch)
+    rows = bm25_auto_topk(bm25_index, "body", ["alpha"], 1).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in exact]
     assert stats["blocks_total"] == 3
     assert stats["blocks_decoded"] == 1  # pruned, not full decode
-
-
-def test_auto_dispatch_picks_exhaustive_below_threshold(bm25_index):
-    # tiny corpus: matched postings ≪ the calibrated threshold → the
-    # planner rule must pick the single-job exhaustive plan
-    from veloci_spark.bm25 import bm25_auto_topk
-
-    stats: dict = {}
-    rows = bm25_auto_topk(
-        bm25_index, "body", ["alpha", "gamma"], 5, stats=stats
-    ).collect()
-    exact = bm25_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
-    assert stats["dispatch"] == "exhaustive"
-    assert stats["matched_postings"] > 0
-    assert [tuple(r) for r in rows] == [tuple(r) for r in exact]
-
-
-def test_auto_dispatch_picks_wand_above_threshold(bm25_index):
-    # forcing the threshold to 0 postings must route through WAND and
-    # stay rank-identical (the dispatch is a plan choice, not a result
-    # choice)
-    from veloci_spark.bm25 import bm25_auto_topk
-
-    stats: dict = {}
-    rows = bm25_auto_topk(
-        bm25_index, "body", ["alpha", "gamma"], 5, min_postings=0, stats=stats
-    ).collect()
-    exact = bm25_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
-    assert stats["dispatch"] == "wand"
-    assert stats["blocks_total"] >= stats["blocks_decoded"] >= 1
-    assert [tuple(r) for r in rows] == [tuple(r) for r in exact]
-
-
-def test_auto_dispatch_env_override(bm25_index, monkeypatch):
-    from veloci_spark.bm25 import bm25_auto_topk
-
-    monkeypatch.setenv("SPARK_GRAFT_WAND_MIN_POSTINGS", "0")
-    stats: dict = {}
-    bm25_auto_topk(bm25_index, "body", ["alpha"], 2, stats=stats).collect()
-    assert stats["dispatch"] == "wand"
 
 
 def test_resume_skips_bm25_stage(spark, tmp_root, bm25_index):
@@ -446,21 +411,6 @@ def test_bm25f_single_field_weight1_equals_bm25(phrase_index):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_bm25f_auto_dispatch_both_arms(phrase_index):
-    from veloci_spark.bm25 import bm25f_auto_topk, bm25f_topk
-
-    terms = ["merge", "py"]
-    weights = {"body": 1, "path": 3}
-    exact = [tuple(r) for r in bm25f_topk(phrase_index, weights, terms, 5).collect()]
-    for forced, want in ((None, "exhaustive"), (0, "wand")):
-        stats: dict = {}
-        rows = bm25f_auto_topk(
-            phrase_index, weights, terms, 5, min_postings=forced, stats=stats
-        ).collect()
-        assert stats["dispatch"] == want
-        assert [tuple(r) for r in rows] == [tuple(r) for r in exact]
-
-
 def test_bm25_explain_provenance_sums_to_topk(spark, bm25_index):
     """Explain rows partition each top-k doc's score: per-term integer
     contributions sum exactly to score_e4, and the (doc, total) pairs
@@ -493,7 +443,7 @@ def test_bm25_explain_decodes_only_topk_blocks(bm25_index):
 
 # ------------------------------------------- BM25-only build (no native)
 
-def test_bm25_only_build_skips_native_postings(spark, tmp_root):
+def test_bm25_only_build_skips_native_postings(spark, tmp_root, monkeypatch):
     """native_postings=False: the expensive native posting stage is
     skipped for the field, BM25 results are IDENTICAL to a full build,
     and native Request search raises a clear error instead of silently
@@ -522,10 +472,12 @@ def test_bm25_only_build_skips_native_postings(spark, tmp_root):
     ]
     assert "postings" not in stages
 
-    # BM25 answers are bit-identical to the full build's
-    for fn in (bm25_topk, bm25_wand_topk):
-        a = [tuple(r) for r in fn(full, "body", ["alpha", "beta"], 5).collect()]
-        b = [tuple(r) for r in fn(lean, "body", ["alpha", "beta"], 5).collect()]
+    # BM25 answers are bit-identical to the full build's, on both plans
+    for loop in (False, True):
+        if loop:
+            _force_loop(monkeypatch)
+        a = [tuple(r) for r in bm25_auto_topk(full, "body", ["alpha", "beta"], 5).collect()]
+        b = [tuple(r) for r in bm25_auto_topk(lean, "body", ["alpha", "beta"], 5).collect()]
         assert a == b and a
 
     # native search path refuses loudly
@@ -618,15 +570,12 @@ def test_filtered_equals_postfiltered_exhaustive(bm25_index):
     assert [tuple(r) for r in got] == expect
 
 
-def test_filtered_wand_rank_identical(bm25_index):
-    from veloci_spark.bm25 import bm25_filtered_topk, bm25_filtered_wand_topk
-
+def test_filtered_wand_rank_identical(bm25_index, monkeypatch):
     terms = ["alpha", "beta", "gamma"]
     pred = F.col("doc_id") % 3 != 1
     exact = bm25_filtered_topk(bm25_index, "body", terms, 4, pred).collect()
-    wand = bm25_filtered_wand_topk(
-        bm25_index, "body", terms, 4, pred, start_blocks=1, max_iters=8
-    ).collect()
+    _force_loop(monkeypatch)
+    wand = bm25_filtered_topk(bm25_index, "body", terms, 4, pred).collect()
     assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
@@ -639,15 +588,14 @@ def test_filtered_true_predicate_is_unfiltered(bm25_index):
     assert [tuple(r) for r in got] == [tuple(r) for r in exact]
 
 
-def test_filtered_nothing_allowed_is_empty(bm25_index):
-    from veloci_spark.bm25 import bm25_filtered_topk, bm25_filtered_wand_topk
-
+def test_filtered_nothing_allowed_is_empty(bm25_index, monkeypatch):
     assert bm25_filtered_topk(
         bm25_index, "body", ["alpha"], 5, F.lit(False)
     ).count() == 0
     # WAND never decodes its way into a phantom result either
-    assert bm25_filtered_wand_topk(
-        bm25_index, "body", ["alpha"], 5, F.lit(False), start_blocks=1
+    _force_loop(monkeypatch)
+    assert bm25_filtered_topk(
+        bm25_index, "body", ["alpha"], 5, F.lit(False)
     ).count() == 0
 
 
@@ -657,46 +605,47 @@ _LOOP_WEIGHTS = {"body": 1, "path": 3}
 _LOOP_FILTER = "doc_id % 3 != 1"
 
 
-def _loop_pair(variant, bm25_index, phrase_index):
-    """(exhaustive twin, block-max variant) as k, max_iters -> frame."""
-    from veloci_spark.bm25 import (
-        bm25_filtered_topk,
-        bm25_filtered_wand_topk,
-        bm25f_topk,
-        bm25f_wand_topk,
-    )
-
-    if variant == "or":
+def _kind_entry(kind, bm25_index, phrase_index):
+    """(entry as k -> frame, its matched postings total as a thunk) for
+    each BM25 query kind."""
+    idx, weights = bm25_index, {"body": 1}
+    if kind == "or":
         t = ["alpha", "gamma"]
-        return (
-            lambda k: bm25_topk(bm25_index, "body", t, k),
-            lambda k, it: bm25_wand_topk(
-                bm25_index, "body", t, k, start_blocks=1, max_iters=it
-            ),
-        )
-    if variant == "and":
+        entry = lambda k: bm25_auto_topk(idx, "body", t, k)
+    elif kind == "and":
         t = ["alpha", "beta"]
-        return (
-            lambda k: bm25_and_topk(bm25_index, "body", t, k),
-            lambda k, it: bm25_and_wand_topk(
-                bm25_index, "body", t, k, start_blocks=1, max_iters=it
-            ),
-        )
-    if variant == "bm25f":
-        t = ["merge", "py"]
-        return (
-            lambda k: bm25f_topk(phrase_index, _LOOP_WEIGHTS, t, k),
-            lambda k, it: bm25f_wand_topk(
-                phrase_index, _LOOP_WEIGHTS, t, k, start_blocks=1, max_iters=it
-            ),
-        )
-    t = ["alpha", "beta", "gamma"]
-    return (
-        lambda k: bm25_filtered_topk(bm25_index, "body", t, k, _LOOP_FILTER),
-        lambda k, it: bm25_filtered_wand_topk(
-            bm25_index, "body", t, k, _LOOP_FILTER, start_blocks=1, max_iters=it
-        ),
+        entry = lambda k: bm25_and_topk(idx, "body", t, k)
+    elif kind == "bm25f":
+        t, idx, weights = ["merge", "py"], phrase_index, _LOOP_WEIGHTS
+        entry = lambda k: bm25f_topk(idx, weights, t, k)
+    else:
+        t = ["alpha", "beta", "gamma"]
+        entry = lambda k: bm25_filtered_topk(idx, "body", t, k, _LOOP_FILTER)
+    return entry, lambda: bm25._field_parts(idx, weights, t)[1]
+
+
+@pytest.mark.parametrize("kind", ["or", "and", "bm25f", "filtered"])
+def test_topk_rule_runs_loop_iff_postings_reach_threshold(
+    bm25_index, phrase_index, monkeypatch, kind
+):
+    """Every kind entry runs the block-max driver exactly when its
+    matched postings reach WAND_MIN_POSTINGS (never at fixture scale
+    by default), and answers the same rows either way."""
+    entry, postings_of = _kind_entry(kind, bm25_index, phrase_index)
+    postings = postings_of()
+    assert 0 < postings < bm25.WAND_MIN_POSTINGS
+    calls = []
+    driver = bm25.blockmax_topk
+    monkeypatch.setattr(
+        bm25, "blockmax_topk", lambda *a, **kw: calls.append(1) or driver(*a, **kw)
     )
+    want = [tuple(r) for r in entry(5).collect()]
+    assert not calls
+    for threshold, loop in ((postings + 1, False), (postings, True)):
+        monkeypatch.setattr(bm25, "WAND_MIN_POSTINGS", threshold)
+        calls.clear()
+        assert [tuple(r) for r in entry(5).collect()] == want
+        assert bool(calls) == loop, threshold
 
 
 @pytest.mark.parametrize("max_iters", [1, 8])
@@ -705,28 +654,26 @@ def _loop_pair(variant, bm25_index, phrase_index):
 def test_blockmax_loop_rank_identical(
     bm25_index, phrase_index, monkeypatch, variant, k, max_iters
 ):
-    """With the small-volume short-circuit off, every block-max variant
-    runs the pruning loop (max_iters=1 from one start block also forces
-    the full-decode fallback on these multi-block fixtures) and must
-    equal its exhaustive twin, k=0 included."""
-    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)
-    exact, pruned = _loop_pair(variant, bm25_index, phrase_index)
-    want = [tuple(r) for r in exact(k).collect()]
-    assert [tuple(r) for r in pruned(k, max_iters).collect()] == want
+    """With the threshold forced to 0, every kind entry runs the pruning
+    loop (max_iters=1 from one start block also forces the full-decode
+    fallback on these multi-block fixtures) and must equal its own
+    exhaustive plan, k=0 included."""
+    entry, _ = _kind_entry(variant, bm25_index, phrase_index)
+    want = [tuple(r) for r in entry(k).collect()]
+    _force_loop(monkeypatch, max_iters=max_iters)
+    assert [tuple(r) for r in entry(k).collect()] == want
 
 
 def test_blockmax_releases_cache_when_decode_fails(spark, bm25_index, monkeypatch):
     """A filter that fails only at execution aborts the loop's decode;
     the blocks the loop cached must be released all the same."""
-    from veloci_spark.bm25 import bm25_filtered_wand_topk
-
-    monkeypatch.setattr(bm25, "WAND_SMALL_POSTINGS", 0)
+    _force_loop(monkeypatch)
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = persisted().size()
     with pytest.raises(Exception, match="boom"):
-        bm25_filtered_wand_topk(
+        bm25_filtered_topk(
             bm25_index, "body", ["alpha", "gamma"], 3,
-            "raise_error('boom') IS NULL", start_blocks=1,
+            "raise_error('boom') IS NULL",
         ).collect()
     assert persisted().size() == before
 

@@ -324,8 +324,8 @@ def test_random_query_params_never_escape(app, term, extra):
 
 def test_bm25_route_modes(app, spark, tmp_root):
     """POST /:db/bm25 (north-rule extension): mode dispatch equals the
-    direct bm25 calls; filtered results are a subset of unfiltered."""
-    from veloci_spark.bm25 import bm25_topk, bm25_wand_topk
+    direct bm25 calls; the forced-plan modes are gone."""
+    from veloci_spark.bm25 import bm25_topk, bm25f_topk
     from veloci_spark.index import Index
 
     idx = Index(spark, os.path.join(tmp_root, "server_idx"))
@@ -337,11 +337,25 @@ def test_bm25_route_modes(app, spark, tmp_root):
         for r in bm25_topk(idx, "text", body["terms"], 5).collect()
     ]
     assert res == want and len(res) == 5
-    # WAND mode is rank-identical
-    status, res_wand = app.handle(
-        "POST", "/docs/bm25", body={**body, "mode": "or-wand"}
-    )
-    assert status == 200 and res_wand == want
+    # the plan is the posting-volume rule's, never a mode
+    for forced in ("or-wand", "or-scan", "and-wand"):
+        status, res_forced = app.handle(
+            "POST", "/docs/bm25", body={**body, "mode": forced}
+        )
+        assert status == 400 and "unknown bm25 mode" in str(res_forced)
+    # weights combine with mode or: the BM25F entry (filter + or is
+    # test_bm25_route_filtered)
+    weights = {"text": 2}
+    status, res_f = app.handle("POST", "/docs/bm25", body={**body, "weights": weights})
+    assert status == 200 and res_f == [
+        [int(r["doc_id"]), int(r["score_e4"])]
+        for r in bm25f_topk(idx, weights, body["terms"], 5).collect()
+    ]
+    for extra in ({"weights": weights}, {"filter": {"lang": "de"}}):
+        status, _ = app.handle(
+            "POST", "/docs/bm25", body={**body, **extra, "mode": "or-wand"}
+        )
+        assert status == 400
     # AND mode returns docs containing every term
     status, res_and = app.handle(
         "POST", "/docs/bm25", body={**body, "mode": "and"}
@@ -403,7 +417,7 @@ def test_bm25_route_rejections(app):
         },
     )
     assert status == 400 and "no_such_col" in str(res)
-    # filter+weights exclusive; weights need or/or-wand
+    # filter+weights exclusive; weights need mode or
     status, _ = app.handle(
         "POST",
         "/docs/bm25",

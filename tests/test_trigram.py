@@ -353,6 +353,7 @@ def test_dispatch_arms_agree(grep_index):
 
 
 def test_explain_search_dispatch_decision(grep_index, monkeypatch):
+    from veloci_spark import trigram
     from veloci_spark.trigram import explain_search
 
     # a vocabulary-absent literal: proven empty from stats alone
@@ -360,11 +361,11 @@ def test_explain_search_dispatch_decision(grep_index, monkeypatch):
     assert ex["indexable"] and ex["arm"] == "empty"
     assert ex["est_candidates"] == 0
     # a common phrase on the tiny fixture exceeds any sane fraction
-    monkeypatch.setenv("VELOCI_SPARK_REGEX_SCAN_FRAC", "0.01")
+    monkeypatch.setattr(trigram, "SCAN_FRAC", 0.01)
     ex2 = explain_search(grep_index, "body", r"merge (sort|join)")
     assert ex2["indexable"] and ex2["arm"] == "scan"
     # forcing the fraction to 1.0 keeps everything indexed
-    monkeypatch.setenv("VELOCI_SPARK_REGEX_SCAN_FRAC", "1.0")
+    monkeypatch.setattr(trigram, "SCAN_FRAC", 1.0)
     ex3 = explain_search(grep_index, "body", r"merge (sort|join)")
     assert ex3["arm"] == "indexed"
     assert ex3["est_candidates"] <= ex3["n_docs"]

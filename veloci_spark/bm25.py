@@ -242,7 +242,7 @@ def _term_blocks(index, field: str, ids: list[int]) -> DataFrame:
 def _field_parts(
     index, field_weights: dict[str, int], terms: Sequence[str], meta_by_field=None
 ) -> tuple[list, int]:
-    """``(parts, postings)`` for :func:`_scored`/:func:`_blockmax`: one
+    """``(parts, postings)`` for :func:`_topk`: one
     ``(weight, term-filtered blocks)`` pair per field with a dictionary
     match, and the matched ``num_occurences`` total.  ``meta_by_field``
     reuses a probe the caller already collected."""
@@ -312,23 +312,22 @@ def _scored(
 
 def _blockmax(
     parts: Sequence[tuple[int, DataFrame]],
-    postings: int,
     k: int,
     require_all: int = 0,
     allowed: Optional[DataFrame] = None,
-    start_blocks: int = 8,
-    max_iters: int = 8,
     stats: Optional[dict] = None,
 ) -> DataFrame:
     """Block-max WAND over ``parts``, rank-identical to :func:`_scored`
-    with the same arguments: bounds ub(block) = Σ_f Σ_t w_f ·
-    block_max_{f,t} from metadata alone (with ``require_all``, only
-    blocks holding every term), then :func:`wand.blockmax_topk`.
-
-    ``postings`` is the matched ``num_occurences`` sum from the
-    dictionary collect: at or below WAND_SMALL_POSTINGS the loop's extra
-    jobs cannot pay for themselves, so ONE full decode answers instead —
-    rank-identical by the same guarantee as the loop's fallback."""
+    with the same arguments (Ding & Suel, adapted as in wand.py): bounds
+    ub(block) = Σ_f Σ_t w_f · block_max_{f,t} from METADATA only (with
+    ``require_all``, only blocks holding every term: doc-aligned blocks
+    make intersection pruning a metadata join), then
+    :func:`wand.blockmax_topk` decodes the highest-ub candidate blocks
+    until the kth exact score strictly beats every undecoded bound,
+    else falls back to one full decode.  The bounds stay valid under
+    ``allowed`` (filtering only removes docs); the exact phase semi-joins
+    it, so the threshold is the true filtered kth score.  ``stats``
+    receives the driver's ``blocks_total``/``blocks_decoded``."""
     ubs = reduce(
         DataFrame.unionByName,
         [
@@ -337,10 +336,6 @@ def _blockmax(
         ],
     )
     block_ub = _sum_per(ubs, "block_no", "ub", "ub", require_all)
-    if postings <= WAND_SMALL_POSTINGS:
-        if stats is not None:
-            stats["blocks_total"] = stats["blocks_decoded"] = block_ub.count()
-        return _scored(parts, k, require_all, allowed)
 
     def _exact(cand_ids: Optional[list]) -> list:
         sel = parts
@@ -356,22 +351,77 @@ def _blockmax(
         k,
         "doc_id long, score_e4 long",
         lambda r: r["score_e4"],
-        start_blocks=start_blocks,
-        max_iters=max_iters,
+        start_blocks=WAND_START_BLOCKS,
+        max_iters=WAND_MAX_ITERS,
         stats=stats,
         owned=[blocks for _, blocks in parts],
     )
+
+
+# Postings-volume threshold of the exhaustive↔block-max rule (_topk),
+# calibrated on the round-5 Zipf(1) crossover ladder (BENCH/BASELINE.md):
+# at EVERY demonstrated scale (0.35M → 22.7M matched postings, 200k →
+# 12.8M docs) the exhaustive single-job decode beat block-max WAND —
+# pruning engaged (33-40% of blocks dropped) but its fixed costs (one
+# metadata collect + one extra decode job + the candidate restriction)
+# exceeded the decoded-volume savings.  The measured ratio NARROWS with
+# volume (2.05x → 1.97x → 1.76x per 4x growth after the semi-join fix),
+# extrapolating to a crossover near ~10^9 matched postings — the
+# threshold sits there, so the plan is exhaustive everywhere measured and
+# block-max engages only at the scale the trend supports.
+WAND_MIN_POSTINGS = 1_000_000_000
+
+#: the block-max loop's first candidate window and its decode budget
+#: before the full-decode fallback (wand.wand_driver_loop)
+WAND_START_BLOCKS = 8
+WAND_MAX_ITERS = 8
+
+#: bm25_from_tf broadcast-hint bound: below this corpus doc count the
+#: per-doc-length and document-frequency aggregates are hinted
+#: broadcast at build time.
+BM25_BUILD_BROADCAST_DOCS = 1_000_000
+
+
+def _topk(
+    parts: Sequence[tuple[int, DataFrame]],
+    postings: int,
+    k: int,
+    require_all: int = 0,
+    allowed: Optional[DataFrame] = None,
+) -> DataFrame:
+    """The one plan choice behind every BM25 query kind: block-max
+    pruning (the reference's worst-score early termination,
+    search_field.rs:292-331) at or above WAND_MIN_POSTINGS matched
+    postings, the exhaustive :func:`_scored` plan below — rank-identical
+    either way.  ``postings`` (the matched ``num_occurences`` sum ≥ the
+    decode volume) rides the dictionary collect that builds the literal
+    ``term_id IN``, so the choice costs no Spark job, and no bound frame
+    is built below the threshold."""
+    if postings >= WAND_MIN_POSTINGS:
+        return _blockmax(parts, k, require_all, allowed)
+    return _scored(parts, k, require_all, allowed)
 
 
 def bm25_topk(
     index, field: str, terms: Sequence[str], k: int, _ids: Optional[list] = None
 ) -> DataFrame:
     """Exhaustive BM25 top-k: (doc_id, score_e4), OR-sum over terms,
-    deterministic (score desc, doc_id desc) order."""
+    deterministic (score desc, doc_id desc) order — the lower arm of
+    :func:`bm25_auto_topk`, and the plan of the k-bounded operators."""
     ids = _matched_term_ids(index, field, terms) if _ids is None else _ids
     if not ids:
         return _empty_topk(index.spark)
     return _scored([(1, _term_blocks(index, field, ids))], k)
+
+
+def bm25_auto_topk(index, field: str, terms: Sequence[str], k: int) -> DataFrame:
+    """The OR-sum BM25 top-k (HTTP/CLI mode ``or``): the ranking of
+    :func:`bm25_topk`, with the plan picked by the posting-volume rule
+    (:func:`_topk`)."""
+    parts, postings = _field_parts(index, {field: 1}, terms)
+    if not parts:
+        return _empty_topk(index.spark)
+    return _topk(parts, postings, k)
 
 
 def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFrame:
@@ -422,173 +472,14 @@ def bm25_explain_topk(index, field: str, terms: Sequence[str], k: int) -> DataFr
 
 def bm25_and_topk(index, field: str, terms: Sequence[str], k: int) -> DataFrame:
     """Conjunctive (posting-list INTERSECTION) BM25 top-k: only docs
-    containing ALL terms; score = integer sum of per-term entries."""
-    uniq = sorted(set(terms))
-    ids = _matched_term_ids(index, field, uniq)
-    if len(ids) < len(uniq):  # some term absent from the corpus entirely
-        return _empty_topk(index.spark)
-    return _scored([(1, _term_blocks(index, field, ids))], k, require_all=len(ids))
-
-
-def bm25_and_wand_topk(
-    index,
-    field: str,
-    terms: Sequence[str],
-    k: int,
-    start_blocks: int = 8,
-    max_iters: int = 8,
-) -> DataFrame:
-    """Block-max pruned intersection, rank-identical to
-    :func:`bm25_and_topk`.
-
-    Doc-aligned blocks make intersection pruning a METADATA join: a doc
-    holding all terms has one posting row per term in the SAME block_no,
-    so any block_no missing a term's row cannot contain an intersection
-    doc and is pruned before any decompression.  Surviving blocks rank by
-    ub = Σ_t block_max_t; phase 2 decodes candidates and intersects
-    exactly; iterate until the kth exact score strictly beats every
-    unexamined block's bound.
-    """
+    containing ALL terms; score = integer sum of per-term entries.  Plan
+    by the posting-volume rule (:func:`_topk`)."""
     uniq = sorted(set(terms))
     meta = _matched_term_meta(index, field, uniq)
-    if len(meta) < len(uniq):
+    if not meta or len(meta) < len(uniq):  # a term absent from the corpus
         return _empty_topk(index.spark)
     parts, postings = _field_parts(index, {field: 1}, uniq, {field: meta})
-    return _blockmax(
-        parts,
-        postings,
-        k,
-        require_all=len(meta),
-        start_blocks=start_blocks,
-        max_iters=max_iters,
-    )
-
-
-def bm25_wand_topk(
-    index,
-    field: str,
-    terms: Sequence[str],
-    k: int,
-    start_blocks: int = 8,
-    max_iters: int = 8,
-    stats: Optional[dict] = None,
-    _meta: Optional[list] = None,
-) -> DataFrame:
-    """Block-max WAND BM25 top-k, rank-identical to :func:`bm25_topk`.
-
-    Same adaptation of Ding & Suel block-max WAND as wand.py, simplified
-    by integer scores: phase 1 computes per-block upper bounds
-    ub(block) = Σ_t block_max_t from METADATA only; phase 2 decodes only
-    the highest-ub candidate blocks (doc-aligned, so a doc's entries for
-    ALL query terms live in the same block_no and candidate scores are
-    exact); iterate until the kth exact score strictly exceeds every
-    undecoded block's bound (strict: an undecoded doc with an EQUAL score
-    and higher doc_id would win the tie-break).  On budget exhaustion,
-    fall back to one full decode — never a truncated result.
-    """
-    parts, postings = _field_parts(
-        index, {field: 1}, terms, None if _meta is None else {field: _meta}
-    )
-    if not parts:
-        return _empty_topk(index.spark)
-    return _blockmax(
-        parts, postings, k, start_blocks=start_blocks, max_iters=max_iters, stats=stats
-    )
-
-
-# --------------------------- auto dispatch ------------------------------
-
-# Postings-volume threshold for the exhaustive↔WAND planner rule,
-# calibrated on the round-5 Zipf(1) crossover ladder (BENCH/BASELINE.md):
-# at EVERY demonstrated scale (0.35M → 22.7M matched postings, 200k →
-# 12.8M docs) the exhaustive single-job decode beat block-max WAND —
-# pruning engaged (33-40% of blocks dropped) but its fixed costs (one
-# metadata collect + one extra decode job + the candidate restriction)
-# exceeded the decoded-volume savings.  The measured ratio NARROWS with
-# volume (2.05x → 1.97x → 1.76x per 4x growth after the semi-join fix),
-# extrapolating to a crossover near ~10^9 matched postings — the default
-# sits there, so the shipped plan is exhaustive everywhere measured and
-# WAND engages only at the scale the trend supports.  Corpora with
-# stronger pruning (genuinely rare conjunct terms, larger blocks) cross
-# earlier: override per call or via SPARK_GRAFT_WAND_MIN_POSTINGS.
-WAND_MIN_POSTINGS = 1_000_000_000
-
-#: At or below this total matched-postings volume every block-max path
-#: runs ONE full decode directly instead of the probe/certificate loop
-#: whose fallback it would hit anyway (see _blockmax).  Calibration: a
-#: 1M-posting decode is a single sub-second job at any parallelism, and
-#: the round-5 crossover ladder measured the full decode beating the
-#: loop at EVERY rung it could reach (0.35M–22.7M matched postings,
-#: 1.76–2.05x), so below this bound the loop's extra jobs (metadata
-#: collect + probe decode + certificate re-decode) can never pay.
-WAND_SMALL_POSTINGS = 1_000_000
-
-
-#: bm25_from_tf broadcast-hint bound: below this corpus doc count the
-#: per-doc-length and document-frequency aggregates are hinted
-#: broadcast at build time.
-BM25_BUILD_BROADCAST_DOCS = 1_000_000
-
-
-def _use_wand(total: int, override: Optional[int], stats: Optional[dict]) -> bool:
-    """The planner rule: block-max WAND at or above the matched-postings
-    threshold, exhaustive below it; the arm lands in ``stats``."""
-    if override is None:
-        import os
-
-        override = os.environ.get("SPARK_GRAFT_WAND_MIN_POSTINGS", WAND_MIN_POSTINGS)
-    wand = total >= int(override)
-    if stats is not None:
-        stats["dispatch"] = "wand" if wand else "exhaustive"
-        stats["matched_postings"] = total
-    return wand
-
-
-def bm25_auto_topk(
-    index,
-    field: str,
-    terms: Sequence[str],
-    k: int,
-    min_postings: Optional[int] = None,
-    stats: Optional[dict] = None,
-) -> DataFrame:
-    """The SHIPPED default BM25 top-k: planner-rule dispatch between the
-    exhaustive decode and block-max WAND, rank-identical to both.
-
-    Block-max pruning (the reference's worst-score early termination,
-    search_field.rs:292-331) only pays once the decode volume it avoids
-    exceeds WAND's fixed overhead (one metadata collect + one extra decode
-    job + the candidate restriction); below that the exhaustive
-    single-job plan is strictly faster — measured at every demonstrated
-    scale up to 22.7M matched postings, with the gap narrowing toward a
-    ~10^9-posting crossover (the default threshold; see WAND_MIN_POSTINGS
-    and the BENCH/BASELINE.md round-5 ladder).  The matched terms' total
-    ``num_occurences`` (≥ posting count ≈ decode volume) arrives in the
-    SAME bounded dictionary collect that builds the literal term_id
-    IN-list, so the dispatch decision costs zero extra Spark jobs."""
-    meta = _matched_term_meta(index, field, terms)
-    if _use_wand(sum(occ for _, occ in meta), min_postings, stats):
-        return bm25_wand_topk(index, field, terms, k, stats=stats, _meta=meta)
-    return bm25_topk(index, field, terms, k, _ids=[tid for tid, _ in meta])
-
-
-def bm25f_auto_topk(
-    index,
-    field_weights: dict[str, int],
-    terms: Sequence[str],
-    k: int,
-    min_postings: Optional[int] = None,
-    stats: Optional[dict] = None,
-) -> DataFrame:
-    """Planner-rule dispatch for the weighted multi-field path — same
-    rule as :func:`bm25_auto_topk` with the matched posting volume
-    summed ACROSS fields (each field's occurrence counts ride its own
-    bounded dictionary collect, so the decision still costs zero extra
-    jobs relative to either variant)."""
-    meta = {fld: _matched_term_meta(index, fld, terms) for fld in sorted(field_weights)}
-    total = sum(occ for m in meta.values() for _, occ in m)
-    arm = bm25f_wand_topk if _use_wand(total, min_postings, stats) else bm25f_topk
-    return arm(index, field_weights, terms, k, _meta_by_field=meta)
+    return _topk(parts, postings, k, require_all=len(meta))
 
 
 # --------------------------- phrase top-k -------------------------------
@@ -724,7 +615,6 @@ def bm25f_topk(
     field_weights: dict[str, int],
     terms: Sequence[str],
     k: int,
-    _meta_by_field: Optional[dict] = None,
 ) -> DataFrame:
     """Weighted multi-field BM25 ("BM25F" in the simple per-field-sum
     form): score(d) = Σ_f w_f · Σ_t bm25_f(t, d), disjunctive over terms
@@ -735,34 +625,12 @@ def bm25f_topk(
 
     Each field's blocks are decoded independently (term ids are
     per-field) with a literal term_id IN pushed to its partition-pruned
-    scan; the weighted flats union into ONE per-doc aggregation."""
-    parts, _ = _field_parts(index, field_weights, terms, _meta_by_field)
-    return _scored(parts, k) if parts else _empty_topk(index.spark)
-
-
-def bm25f_wand_topk(
-    index,
-    field_weights: dict[str, int],
-    terms: Sequence[str],
-    k: int,
-    start_blocks: int = 8,
-    max_iters: int = 8,
-    _meta_by_field: Optional[dict] = None,
-) -> DataFrame:
-    """Block-max pruned BM25F, rank-identical to :func:`bm25f_topk`.
-
-    Doc-aligned blocks share ``block_no = doc_id // block_docs`` ACROSS
-    fields, so a per-block upper bound for the weighted multi-field sum
-    is computable from metadata alone: ub(block) = Σ_f Σ_t w_f ·
-    block_max_{f,t}.  Phase 2 decodes only candidate blocks in every
-    field; iterate until the kth exact integer score strictly beats the
-    max undecoded bound, else fall back to one full decode."""
-    parts, postings = _field_parts(index, field_weights, terms, _meta_by_field)
-    if not parts:
-        return _empty_topk(index.spark)
-    return _blockmax(
-        parts, postings, k, start_blocks=start_blocks, max_iters=max_iters
-    )
+    scan; the weighted flats union into ONE per-doc aggregation.  Plan
+    by the posting-volume rule (:func:`_topk`), the volume summed across
+    fields; block bounds are weighted sums over the block_no that
+    doc-aligned blocks share across fields."""
+    parts, postings = _field_parts(index, field_weights, terms)
+    return _topk(parts, postings, k) if parts else _empty_topk(index.spark)
 
 
 # ---------------------------- batched queries ----------------------------
@@ -885,50 +753,12 @@ def bm25_filtered_topk(
     LEFT SEMI join on the decoded posting stream BEFORE the per-doc
     aggregation, so only surviving postings enter the top-k shuffle.
     AQE picks the semi-join strategy from the filtered side's runtime
-    size (a selective predicate ⇒ broadcast hash join)."""
-    ids = _matched_term_ids(index, field, terms)
-    if not ids:
-        return _empty_topk(index.spark)
-    return _scored(
-        [(1, _term_blocks(index, field, ids))],
-        k,
-        allowed=_allowed_docs(index, doc_filter),
-    )
-
-
-def bm25_filtered_wand_topk(
-    index,
-    field: str,
-    terms: Sequence[str],
-    k: int,
-    doc_filter,
-    start_blocks: int = 8,
-    max_iters: int = 8,
-) -> DataFrame:
-    """Block-max WAND under a metadata filter, rank-identical to
-    :func:`bm25_filtered_topk`.
-
-    The unfiltered per-block bounds ub(block) = Σ_t block_max_t stay
-    VALID upper bounds under any filter (filtering only removes docs, so
-    the best filtered score in a block is ≤ the unfiltered bound) —
-    phase 1 is unchanged metadata-only work.  Phase 2's exact decode
-    applies the allowed-docs semi join before aggregating, so the
-    threshold the loop raises is the true filtered kth score.  A very
-    selective filter makes the bounds loose (blocks whose top docs are
-    all filtered away still look promising), which costs extra
-    iterations, never wrong results; on budget exhaustion the fallback
-    is one full filtered decode."""
+    size (a selective predicate ⇒ broadcast hash join).  Plan by the
+    posting-volume rule (:func:`_topk`)."""
     parts, postings = _field_parts(index, {field: 1}, terms)
     if not parts:
         return _empty_topk(index.spark)
-    return _blockmax(
-        parts,
-        postings,
-        k,
-        allowed=_allowed_docs(index, doc_filter),
-        start_blocks=start_blocks,
-        max_iters=max_iters,
-    )
+    return _topk(parts, postings, k, allowed=_allowed_docs(index, doc_filter))
 
 
 def bm25_topk_after(

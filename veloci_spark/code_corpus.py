@@ -32,11 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from veloci_spark.bm25 import (
     bm25_and_topk,
-    bm25_and_wand_topk,
     bm25_batch_topk,
     bm25_explain_topk,
     bm25_filtered_topk,
-    bm25_filtered_wand_topk,
     bm25_phrase_topk,
     bm25_auto_topk,
     bm25_collapse_topk,
@@ -49,13 +47,16 @@ from veloci_spark.bm25 import (
     bm25_snippet_topk,
     bm25_topk,
     bm25_topk_after,
-    bm25_wand_topk,
     bm25f_topk,
-    bm25f_wand_topk,
     sql_bm25_e4,
 )
 from veloci_spark.build import build_index
-from veloci_spark.config import DEFAULT_SEPARATORS, FieldConfig, IndexConfig
+from veloci_spark.config import (
+    DEFAULT_SEPARATORS,
+    FieldConfig,
+    IndexConfig,
+    index_cache_root,
+)
 from veloci_spark.index import Index
 from veloci_spark.oracle import _q
 from veloci_spark.tokenize import run_pattern, sep_class
@@ -313,9 +314,6 @@ ORDER BY score_e4 DESC, doc_id DESC LIMIT {k}"""
 
 # ------------------------------ index cache ------------------------------
 
-INDEX_CACHE_ROOT = os.environ.get(
-    "VELOCI_SPARK_INDEX_CACHE", "/tmp/veloci_spark_index_cache"
-)
 _INDEX_CACHE: dict[tuple[int, str], Index] = {}
 
 
@@ -326,7 +324,7 @@ CODE_INDEX_VERSION = "v4"
 
 def code_index_dir(sf_dir: str) -> str:
     tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(INDEX_CACHE_ROOT, f"code_{CODE_INDEX_VERSION}_{tag}")
+    return os.path.join(index_cache_root(), f"code_{CODE_INDEX_VERSION}_{tag}")
 
 
 def code_index(spark: SparkSession, sf_dir: str) -> Index:
@@ -396,10 +394,13 @@ _ORACLES["code_bm25_topk"] = _bm25_topk_sql(_TOPK_TERMS, 20)
 
 
 def _q_bm25_wand(spark, sf_dir):
-    """Block-max WAND path — SAME oracle as the exhaustive top-k: the
-    pruned result must be rank-identical."""
+    """The OR kind's entry, whose posting-volume rule (bm25._topk) picks
+    block-max WAND past bm25.WAND_MIN_POSTINGS — SAME oracle as the
+    exhaustive top-k: whichever plan runs must be rank-identical.  The
+    loop itself is pinned rank-identical in tests/test_bm25.py with the
+    threshold forced."""
     idx = code_index(spark, sf_dir)
-    return bm25_wand_topk(idx, "content", _TOPK_TERMS, 20, start_blocks=2)
+    return bm25_auto_topk(idx, "content", _TOPK_TERMS, 20)
 
 
 _QUERIES["code_bm25_wand"] = _q_bm25_wand
@@ -407,10 +408,10 @@ _ORACLES["code_bm25_wand"] = _bm25_topk_sql(_TOPK_TERMS, 20)
 
 
 def _q_bm25_auto(spark, sf_dir):
-    """The SHIPPED default path: planner-rule dispatch between the
-    exhaustive decode and block-max WAND on the matched terms' posting
-    volume (bm25.bm25_auto_topk) — SAME oracle as the exhaustive top-k:
-    whichever plan the rule picks must be rank-identical."""
+    """The OR kind's entry (bm25.bm25_auto_topk): the posting-volume
+    rule picks the exhaustive decode or block-max WAND — SAME oracle as
+    the exhaustive top-k: whichever plan the rule picks must be
+    rank-identical."""
     idx = code_index(spark, sf_dir)
     return bm25_auto_topk(idx, "content", _TOPK_TERMS, 20)
 
@@ -480,10 +481,12 @@ _ORACLES["code_bm25_and"] = _bm25_and_sql(_AND_TERMS, 20)
 
 
 def _q_bm25_and_wand(spark, sf_dir):
-    """Block-max pruned posting-list intersection — same oracle as the
-    exhaustive AND (rank identity)."""
+    """The intersection kind's entry, whose posting-volume rule picks
+    block-max pruning (blocks missing a term are dropped from metadata
+    alone) past bm25.WAND_MIN_POSTINGS — same oracle as the exhaustive
+    AND (rank identity)."""
     idx = code_index(spark, sf_dir)
-    return bm25_and_wand_topk(idx, "content", _AND_TERMS, 20, start_blocks=2)
+    return bm25_and_topk(idx, "content", _AND_TERMS, 20)
 
 
 _QUERIES["code_bm25_and_wand"] = _q_bm25_and_wand
@@ -574,11 +577,12 @@ _ORACLES["code_bm25f_topk"] = _bm25f_sql(_BM25F_TERMS, 20)
 
 
 def _q_bm25f_wand(spark, sf_dir):
-    """Block-max pruned BM25F — same oracle as the exhaustive weighted
-    sum (rank identity); bounds are metadata-only weighted sums over the
-    doc-aligned block_no shared across fields."""
+    """The BM25F kind's entry, whose posting-volume rule picks block-max
+    pruning past bm25.WAND_MIN_POSTINGS — same oracle as the exhaustive
+    weighted sum (rank identity); bounds are metadata-only weighted sums
+    over the doc-aligned block_no shared across fields."""
     idx = code_index(spark, sf_dir)
-    return bm25f_wand_topk(idx, _BM25F_WEIGHTS, _BM25F_TERMS, 20, start_blocks=2)
+    return bm25f_topk(idx, _BM25F_WEIGHTS, _BM25F_TERMS, 20)
 
 
 _QUERIES["code_bm25f_wand"] = _q_bm25f_wand
@@ -623,13 +627,13 @@ _ORACLES["code_bm25_filtered"] = _bm25_filtered_sql(_TOPK_TERMS, 20, _FILTER_LAN
 
 
 def _q_bm25_filtered_wand(spark, sf_dir):
-    """Block-max WAND under the same filter — same oracle (rank
+    """The filtered kind's entry, whose posting-volume rule picks
+    block-max WAND past bm25.WAND_MIN_POSTINGS — same oracle (rank
     identity): unfiltered block bounds remain valid upper bounds under
     any filter, the exact phase semi-joins the allowed docs."""
     idx = code_index(spark, sf_dir)
-    return bm25_filtered_wand_topk(
-        idx, "content", _TOPK_TERMS, 20,
-        F.col("lang") == _FILTER_LANG, start_blocks=2,
+    return bm25_filtered_topk(
+        idx, "content", _TOPK_TERMS, 20, F.col("lang") == _FILTER_LANG
     )
 
 
@@ -734,13 +738,11 @@ ORDER BY score_e4 DESC, doc_id DESC"""
 
 
 def _q_bm25f_auto(spark, sf_dir):
-    """Planner-dispatched BM25F (variant of the code_bm25_auto window
-    mechanism — extras per the rotation policy); same oracle as the
-    exhaustive weighted sum."""
-    from veloci_spark.bm25 import bm25f_auto_topk
-
+    """Rule-dispatched BM25F (variant of the code_bm25_auto window
+    mechanism — extras per the rotation policy): the BM25F kind's entry;
+    same oracle as the exhaustive weighted sum."""
     idx = code_index(spark, sf_dir)
-    return bm25f_auto_topk(idx, _BM25F_WEIGHTS, _BM25F_TERMS, 20)
+    return bm25f_topk(idx, _BM25F_WEIGHTS, _BM25F_TERMS, 20)
 
 
 # ---- field collapse + more-like-this: the result-diversification and

@@ -10,6 +10,7 @@ materialized.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field as dc_field
 from typing import Optional
 
@@ -22,6 +23,12 @@ DEFAULT_SEPARATORS: tuple[str, ...] = (
 # Reference default: texts longer than this many *bytes* are excluded from
 # the term dictionary (/root/reference/src/metadata.rs:66-68).
 DEFAULT_MAX_TEXT_BYTES = 64
+
+
+def index_cache_root() -> str:
+    """Directory of the on-disk index cache behind the declared queries
+    (``VELOCI_SPARK_INDEX_CACHE``; the engine's only environment read)."""
+    return os.environ.get("VELOCI_SPARK_INDEX_CACHE", "/tmp/veloci_spark_index_cache")
 
 
 @dataclass(frozen=True)

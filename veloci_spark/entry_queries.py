@@ -18,7 +18,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from veloci_spark.build import build_index
-from veloci_spark.config import FieldConfig, IndexConfig
+from veloci_spark.config import FieldConfig, IndexConfig, index_cache_root
 from veloci_spark.executor import _Executor, search
 from veloci_spark.index import Index
 from veloci_spark.oracle import (
@@ -40,9 +40,6 @@ from veloci_spark.request import (
 )
 from veloci_spark.scoring import score_e4, sql_score_e4
 
-INDEX_CACHE_ROOT = os.environ.get(
-    "VELOCI_SPARK_INDEX_CACHE", "/tmp/veloci_spark_index_cache"
-)
 
 DOC_CONFIG = IndexConfig(
     fields=(FieldConfig("text", phrase_pairs=True), FieldConfig("lang")),
@@ -60,7 +57,7 @@ def documents_index(spark: SparkSession, sf_dir: str) -> Index:
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join(INDEX_CACHE_ROOT, f"documents_v2_{tag}")
+    out = os.path.join(index_cache_root(), f"documents_v2_{tag}")
     corpus = read_fanned(spark, os.path.join(sf_dir, "documents.parquet"))
     idx = build_index(spark, corpus, DOC_CONFIG, out, resume=True)
     _INDEX_CACHE[key] = idx
@@ -748,7 +745,7 @@ def nested_orders_index(spark: SparkSession, sf_dir: str) -> Index:
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join(INDEX_CACHE_ROOT, f"orders_nested_v2_{tag}")
+    out = os.path.join(index_cache_root(), f"orders_nested_v2_{tag}")
     cfg = NESTED_CONFIG
     # doc_id pre-assigned by nested_corpus; keep it
     corpus = nested_corpus(spark, sf_dir)

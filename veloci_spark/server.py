@@ -17,7 +17,8 @@ driver-local port:
 - ``GET  /<db>/_id/<id>``               doc store row
 - ``GET  /<db>/inspect/<path>/<id>``    tree-edge parent values
 - ``POST /<db>/bm25``                   north-rule extension: single-query
-  BM25 (modes or/and/or-wand/and-wand/phrase/near/snippet/fuzzy/sigterms/facets/explain/collapse,
+  BM25 (modes or/and/phrase/near/snippet/fuzzy/sigterms/facets/explain/collapse;
+  or/and pick exhaustive or block-max by matched posting volume;
   structured metadata filter, BM25F weights, search_after cursor)
 - ``POST /<db>/bm25_batch``             north-rule extension: query set
   in one job
@@ -504,16 +505,17 @@ class VelociApp:
             # North-rule extension: the single-query BM25 surface the
             # CLI exposes (jobs/query_job.py --bm25), HTTP-shaped. Body:
             #   {"field": str, "terms": [str...], "top": k,
-            #    "mode": "or"|"and"|"or-wand"|"and-wand"|"phrase"|"explain"
+            #    "mode": "or"|"and"|"phrase"|"explain"
             #            |"near" (+ "slop", "in_order") |"snippet" (+ "window")
             #            |"fuzzy" (+ "max_dist", "prefix_len")
             #            |"sigterms" (+ "sample", "min_fg")
             #            |"facets" (+ "group_cols")
             #            |"collapse" (+ "group_col", "per_group"),
-            #    "filter": {col: value, ...}?,     (equality conjunction —
-            #      structured, NOT raw SQL: columns validated against the
-            #      doc store, values bound as literals)
-            #    "weights": {field: int, ...}?,    (BM25F)
+            #    "filter": {col: value, ...}?,     (mode or; equality
+            #      conjunction — structured, NOT raw SQL: columns
+            #      validated against the doc store, values bound as
+            #      literals)
+            #    "weights": {field: int, ...}?,    (mode or; BM25F)
             #    "after": [score_e4, doc_id]?}      (cursor pagination —
             #      deep paging without the skip-scan anti-pattern)
             from veloci_spark import bm25
@@ -544,26 +546,19 @@ class VelociApp:
                     400, "after combines only with plain or-mode queries"
                 )
             if weights is not None:
-                if mode not in ("or", "or-wand") or not (
+                if mode != "or" or not (
                     isinstance(weights, dict)
                     and weights
                     and all(isinstance(v, int) for v in weights.values())
                 ):
                     raise HttpError(
-                        400,
-                        "weights must be {field: int} with mode or/or-wand",
+                        400, "weights must be {field: int} with mode or"
                     )
-                fn = (
-                    bm25.bm25f_wand_topk
-                    if mode == "or-wand"
-                    else bm25.bm25f_topk
-                )
-                rows = fn(idx, weights, terms, top).collect()
+                rows = bm25.bm25f_topk(idx, weights, terms, top).collect()
             elif flt is not None:
-                if mode not in ("or", "or-wand") or not isinstance(flt, dict):
+                if mode != "or" or not isinstance(flt, dict):
                     raise HttpError(
-                        400,
-                        "filter must be {column: value} with mode or/or-wand",
+                        400, "filter must be {column: value} with mode or"
                     )
                 cols = set(idx.docstore().columns)
                 bad = [c for c in flt if c not in cols]
@@ -573,12 +568,9 @@ class VelociApp:
                 for c, v in flt.items():
                     clause = F.col(c) == F.lit(v)
                     pred = clause if pred is None else (pred & clause)
-                fn = (
-                    bm25.bm25_filtered_wand_topk
-                    if mode == "or-wand"
-                    else bm25.bm25_filtered_topk
-                )
-                rows = fn(idx, field, terms, top, pred).collect()
+                rows = bm25.bm25_filtered_topk(
+                    idx, field, terms, top, pred
+                ).collect()
             elif mode == "collapse":
                 # field-collapsed top-k: <= per_group docs per group_col
                 # value (bm25.bm25_collapse_topk); rows carry the group
@@ -723,16 +715,12 @@ class VelociApp:
                 ).collect()
             else:
                 try:
-                    # "or" is the planner-dispatched default (exhaustive
-                    # below the calibrated postings-volume threshold,
-                    # block-max WAND above — rank-identical either way);
-                    # "or-scan"/"or-wand" force a specific plan.
+                    # "or"/"and" pick their plan by the matched posting
+                    # volume (exhaustive below bm25.WAND_MIN_POSTINGS,
+                    # block-max WAND above — rank-identical either way)
                     fn = {
                         "or": bm25.bm25_auto_topk,
-                        "or-scan": bm25.bm25_topk,
                         "and": bm25.bm25_and_topk,
-                        "or-wand": bm25.bm25_wand_topk,
-                        "and-wand": bm25.bm25_and_wand_topk,
                         "phrase": bm25.bm25_phrase_topk,
                         "explain": bm25.bm25_explain_topk,
                     }[mode]

@@ -337,10 +337,6 @@ TRIS_PER_ALT = 3
 SCAN_FRAC = 0.10
 
 
-def _scan_frac() -> float:
-    return float(os.environ.get("VELOCI_SPARK_REGEX_SCAN_FRAC", SCAN_FRAC))
-
-
 def select_plan(
     index, field: str, plan: list[frozenset[str]], ci: bool = False
 ) -> tuple[list[frozenset[str]], int]:
@@ -388,7 +384,7 @@ def _pruned_docs(
         return docs.where(F.lit(False))
     if prune == "auto":
         n_docs = trigram_meta(index, field, ci=ignore_case)["n_docs"]
-        if est > _scan_frac() * n_docs:
+        if est > SCAN_FRAC * n_docs:
             return docs  # unselective pattern: the scan is the fast plan
     return docs.join(
         regex_candidates(index, field, pruned, ci=ignore_case),
@@ -407,7 +403,7 @@ def explain_search(index, field: str, pattern: str, ignore_case: bool = False) -
     n_docs = trigram_meta(index, field, ci=ignore_case)["n_docs"]
     if not pruned:
         arm = "empty"  # proven empty from the stats lookup alone
-    elif est <= _scan_frac() * n_docs:
+    elif est <= SCAN_FRAC * n_docs:
         arm = "indexed"
     else:
         arm = "scan"
