@@ -198,6 +198,41 @@ def test_wand_prunes_on_skewed_blocks(bm25_index, monkeypatch):
     assert stats["blocks_decoded"] == 1  # pruned, not full decode
 
 
+def _spy_blockmax(monkeypatch) -> dict:
+    """Route the block-max driver's stats into the returned dict; it
+    stays empty while the exhaustive arm runs."""
+    stats: dict = {}
+    driver = bm25.blockmax_topk
+    monkeypatch.setattr(
+        bm25, "blockmax_topk", lambda *a, **kw: driver(*a, **{**kw, "stats": stats})
+    )
+    return stats
+
+
+def test_auto_dispatch_picks_exhaustive_below_threshold(bm25_index, monkeypatch):
+    # tiny corpus: matched postings ≪ the calibrated threshold → the
+    # rule must pick the single-job exhaustive plan
+    postings = bm25._field_parts(bm25_index, {"body": 1}, ["alpha", "gamma"])[1]
+    assert 0 < postings < bm25.WAND_MIN_POSTINGS
+    stats = _spy_blockmax(monkeypatch)
+    rows = bm25_auto_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
+    exact = bm25_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
+    assert not stats
+    assert [tuple(r) for r in rows] == [tuple(r) for r in exact]
+
+
+def test_auto_dispatch_picks_wand_above_threshold(bm25_index, monkeypatch):
+    # forcing the threshold to 0 postings must route through block-max
+    # WAND and stay rank-identical (the dispatch is a plan choice, not a
+    # result choice)
+    stats = _spy_blockmax(monkeypatch)
+    monkeypatch.setattr(bm25, "WAND_MIN_POSTINGS", 0)
+    rows = bm25_auto_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
+    exact = bm25_topk(bm25_index, "body", ["alpha", "gamma"], 5).collect()
+    assert stats["blocks_total"] >= stats["blocks_decoded"] >= 1
+    assert [tuple(r) for r in rows] == [tuple(r) for r in exact]
+
+
 def test_resume_skips_bm25_stage(spark, tmp_root, bm25_index):
     # rebuilding over the same dir with resume=True must not rewrite bm25
     out = os.path.join(tmp_root, "bm25_index")
