@@ -567,7 +567,8 @@ def run_near_snippet_scaling(
       set at k160 is ~43k docs, past the literal-IN cutover, so this
       also exercises the semi-join arm);
     - snippet vs the plain OR top-k — the decoration overhead, which
-      must stay O(k) (bounded collect + literal IN + one Arrow batch)
+      must stay O(k) (bounded collect + literal IN fetch + driver-side
+      window pick)
       and therefore FLAT as the corpus grows."""
     from veloci_spark.bm25 import (
         bm25_and_topk,

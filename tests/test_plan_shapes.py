@@ -336,16 +336,112 @@ def test_trigram_fallback_is_single_docstore_scan(spark):
     assert "rlike" in p.lower() or "RLike" in p
 
 
-def test_snippet_fragment_stage_is_k_bounded(spark):
-    """The snippet decoration must stay O(k): the docstore scan is
-    pruned by a literal doc_id IN (the k result ids), the score
-    join-back is a hinted broadcast, and nothing introduces a Window."""
+_PYTHON_NODES = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def _spy_collects(spark, monkeypatch) -> list:
+    """Record the executed plan of every ``DataFrame.collect`` run from
+    here on (``take``/``first`` go through it too)."""
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    plans = []
+    real = cls.collect
+
+    def collect(self):
+        plans.append(_plan(self))
+        return real(self)
+
+    monkeypatch.setattr(cls, "collect", collect)
+    return plans
+
+
+def _docstore_in_lists(plans) -> list:
+    """The pushed ``doc_id IN`` literal count of every docstore read
+    (Spark pushes a one-literal IN as ``EqualTo``); None for a docstore
+    read that carries no such prune."""
+    import re
+
+    out = []
+    for p in plans:
+        if "/docstore]" not in p:
+            continue
+        m = re.search(r"PushedFilters: \[[^\]]*In\(doc_id, \[([^\]]*)\]\)", p)
+        if m:
+            out.append(len(m.group(1).split(",")))
+        else:
+            out.append(1 if re.search(r"PushedFilters: \[[^\]]*EqualTo\(doc_id,", p) else None)
+    return out
+
+
+def _assert_k_bounded(plans):
+    assert not [n for p in plans for n in _PYTHON_NODES if n in p], plans
+    # createDataFrame over a Python list scans an ExistingRDD whose rows
+    # pass through a Python worker each time it is collected or broadcast
+    assert not [p for p in plans if "ExistingRDD" in p], plans
+    assert not [p for p in plans if "Window" in p], plans
+    fetches = _docstore_in_lists(plans)
+    assert fetches and all(n is not None and n <= 512 for n in fetches), fetches
+
+
+def test_snippet_fragment_stage_is_k_bounded(spark, monkeypatch):
+    """The snippet decoration must stay O(k) and off the Python worker:
+    the k texts come into the driver through docstore reads pruned by a
+    literal doc_id IN of at most 512 ids, no query the call runs (nor
+    the frame it returns) holds a Python-evaluating node or a
+    Python-list scan, and nothing introduces a Window."""
     from veloci_spark.bm25 import bm25_snippet_topk
     from veloci_spark.code_corpus import code_index
 
     idx = code_index(spark, SF_DIR)
+    plans = _spy_collects(spark, monkeypatch)
     df = bm25_snippet_topk(idx, "content", ["spark", "join"], 10)
-    plan = _plan(df)
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan  # F.broadcast(totals) is hinted
-    assert "In(doc_id" in df._jdf.queryExecution().toString()
+    plans.append(_plan(df))
+    _assert_k_bounded(plans)
+
+
+def test_sigterms_sample_count_is_k_bounded(spark, monkeypatch):
+    """The sigterms foreground count runs in the driver over the
+    k_sample texts: the same docstore prune, no Python-evaluating node."""
+    from veloci_spark.bm25 import bm25_sigterms
+    from veloci_spark.code_corpus import code_index
+
+    idx = code_index(spark, SF_DIR)
+    plans = _spy_collects(spark, monkeypatch)
+    df = bm25_sigterms(idx, "content", ["spark", "join"], k_sample=20)
+    plans.append(_plan(df))
+    _assert_k_bounded(plans)
+
+
+@pytest.mark.parametrize("name", ["code_bm25_snippet", "code_bm25_sigterms"])
+def test_k_bounded_fetch_chunks_equal_one_fetch(spark, monkeypatch, name):
+    """With the fetch cut into chunks of 2 ids, snippet and sigterms
+    answer exactly as with one fetch and as the DuckDB oracle, in
+    ceil(hits / 2) docstore reads."""
+    import os
+
+    import duckdb
+
+    import veloci_spark.code_corpus as cc
+    import veloci_spark.wand as wand
+    from veloci_spark.bm25 import bm25_auto_topk, bm25_topk
+
+    whole = [tuple(r) for r in cc._QUERIES[name](spark, SF_DIR).collect()]
+    idx = cc.code_index(spark, SF_DIR)
+    if name == "code_bm25_snippet":
+        hits = bm25_auto_topk(idx, "content", cc._SNIPPET_TERMS, cc._SNIPPET_K)
+    else:
+        hits = bm25_topk(idx, "content", cc._SIG_TERMS, cc._SIG_SAMPLE)
+    hits = hits.count()
+    assert hits > 2
+
+    monkeypatch.setattr(wand, "INLIST_SEMI_JOIN_CUTOVER", 2)
+    plans = _spy_collects(spark, monkeypatch)
+    chunked = [tuple(r) for r in cc._QUERIES[name](spark, SF_DIR).collect()]
+    assert whole and chunked == whole
+    fetches = _docstore_in_lists(plans)
+    assert len(fetches) == (hits + 1) // 2, fetches
+    assert all(n is not None and n <= 2 for n in fetches), fetches
+
+    con = duckdb.connect()
+    docs = os.path.join(SF_DIR, "documents.parquet")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    assert sorted(chunked) == sorted(con.execute(cc._ORACLES[name]).fetchall())

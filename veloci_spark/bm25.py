@@ -39,7 +39,7 @@ generator over the block arrays as native postings; no Python worker.
 from __future__ import annotations
 
 import math
-from functools import reduce
+from functools import partial, reduce
 from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -496,6 +496,57 @@ def _term_id_map(index, field: str, terms: Sequence[str]) -> dict[str, int]:
     return {r["term"]: int(r["term_id"]) for r in rows}
 
 
+def _tokens_of(find, sepset, txt) -> list:
+    if txt is None:
+        return []
+    runs = find(txt)
+    if len(runs) < 2:  # single-run texts emit no tokens
+        return []
+    return [t for t in runs if t[0] not in sepset]
+
+
+def _field_tokens(index, field: str):
+    """Picklable ``text -> non-separator tokens`` under ``field``'s
+    tokenizer; ``[]`` for null and single-run texts, which the build
+    indexes as no tokens either."""
+    from veloci_spark.config import DEFAULT_SEPARATORS
+    from veloci_spark.tokenize import batch_run_tokenizer
+
+    conf = index.field_conf(field)
+    seps = tuple(conf.get("tokenize_on_chars") or ()) or DEFAULT_SEPARATORS
+    grouped = bool(conf.get("tokenizer_grouped", True))
+    return partial(_tokens_of, *batch_run_tokenizer(seps, grouped))
+
+
+def _doc_texts(index, field: str, ids: Sequence[int]):
+    """Yield the docstore's ``(doc_id, field)`` rows for ``ids`` into the
+    driver: one literal ``doc_id IN`` prune and one collect per
+    ``INLIST_SEMI_JOIN_CUTOVER`` ids, so the driver holds one chunk of
+    text at a time."""
+    from veloci_spark.wand import INLIST_SEMI_JOIN_CUTOVER as chunk
+
+    store = index.docstore().select("doc_id", field)
+    for i in range(0, len(ids), chunk):
+        yield from store.where(F.col("doc_id").isin(ids[i : i + chunk])).collect()
+
+
+def _local_frame(spark, rows: list, schema: str) -> DataFrame:
+    """``rows`` as a frame Spark plans as a LocalTableScan, with no
+    Python worker.  ``createDataFrame`` over a Python list scans an RDD
+    whose rows pass through a Python worker's identity map each time the
+    frame is collected or broadcast; built from an Arrow table, the rows
+    go to the JVM once, at creation."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table)
+
+
 def bm25_phrase_topk(index, field: str, terms: Sequence[str], k: int) -> DataFrame:
     """Exact-phrase BM25 top-k: docs containing ``terms`` as ADJACENT
     non-separator tokens (the reference's phrase-pair adjacency semantics,
@@ -560,13 +611,7 @@ def bm25_phrase_topk(index, field: str, terms: Sequence[str], k: int) -> DataFra
     if n >= 3:
         import pandas as pd
 
-        from veloci_spark.config import DEFAULT_SEPARATORS
-        from veloci_spark.tokenize import batch_run_tokenizer
-
-        conf = index.field_conf(field)
-        seps = tuple(conf.get("tokenize_on_chars") or ()) or DEFAULT_SEPARATORS
-        grouped = bool(conf.get("tokenizer_grouped", True))
-        _find, _sepset = batch_run_tokenizer(seps, grouped)
+        tokens = _field_tokens(index, field)
         MAX_INLIST = 100_000
         cand_ids = [r["doc_id"] for r in cand.limit(MAX_INLIST + 1).collect()]
         if len(cand_ids) > MAX_INLIST:
@@ -588,12 +633,7 @@ def bm25_phrase_topk(index, field: str, terms: Sequence[str], k: int) -> DataFra
             for pdf in batches:
                 keep = []
                 for doc_id, txt in zip(pdf["doc_id"], pdf[field]):
-                    if txt is None:
-                        continue
-                    runs = _find(txt)
-                    if len(runs) < 2:
-                        continue
-                    toks = [t for t in runs if t[0] not in _sepset]
+                    toks = tokens(txt)
                     if any(
                         toks[j : j + n] == target
                         for j in range(len(toks) - n + 1)
@@ -1072,9 +1112,7 @@ def bm25_near_topk(
     """
     import pandas as pd
 
-    from veloci_spark.config import DEFAULT_SEPARATORS
     from veloci_spark.index import decode_blocks_df
-    from veloci_spark.tokenize import batch_run_tokenizer
 
     spark = index.spark
     uniq = sorted(set(terms))
@@ -1097,10 +1135,7 @@ def bm25_near_topk(
             .select("doc_id")
         )
 
-        conf = index.field_conf(field)
-        seps = tuple(conf.get("tokenize_on_chars") or ()) or DEFAULT_SEPARATORS
-        grouped = bool(conf.get("tokenizer_grouped", True))
-        _find, _sepset = batch_run_tokenizer(seps, grouped)
+        tokens = _field_tokens(index, field)
         # unlike the phrase verify (pair-chain candidates: rare by
         # construction), an AND intersection of common terms keeps tens
         # of thousands of docs — a literal IN that size plans in O(list)
@@ -1177,13 +1212,7 @@ def bm25_near_topk(
             for pdf in batches:
                 keep = []
                 for doc_id, txt in zip(pdf["doc_id"], pdf[field]):
-                    if txt is None:
-                        continue
-                    runs = _find(txt)
-                    if len(runs) < 2:  # single-run texts emit no tokens
-                        continue
-                    toks = [t for t in runs if t[0] not in _sepset]
-                    if passes(toks):
+                    if passes(tokens(txt)):
                         keep.append(doc_id)
                 yield pd.DataFrame({"doc_id": pd.Series(keep, dtype="int64")})
 
@@ -1223,14 +1252,14 @@ def bm25_snippet_topk(
     highlight.py).
 
     Scale shape: retrieval is the standard pruned-decode top-k;
-    fragment extraction touches exactly k docs (bounded collect →
-    literal ``doc_id IN`` docstore prune → one Arrow batch), so the
-    snippet stage costs O(k · doc_len) regardless of corpus size.
+    fragment extraction touches exactly k docs: their texts come into
+    the driver through literal ``doc_id IN`` docstore prunes of at most
+    ``INLIST_SEMI_JOIN_CUTOVER`` ids each (one collect for k ≤ 512), and
+    the windows are picked in-process, one hit after another, with no
+    Python worker.  The stage costs O(k · doc_len) regardless of corpus
+    size.
     """
-    import pandas as pd
-
-    from veloci_spark.config import DEFAULT_SEPARATORS
-    from veloci_spark.tokenize import batch_run_tokenizer
+    from bisect import bisect_right
 
     spark = index.spark
     W = int(window)
@@ -1241,58 +1270,24 @@ def bm25_snippet_topk(
     # (rank-identical per the dispatch guarantee; ADVICE r5) — snippet
     # mode no longer forces the full decode on large postings volumes
     top_rows = bm25_auto_topk(index, field, terms, k).collect()  # k-bounded
-    if not top_rows:
-        return spark.createDataFrame([], schema)
     scores = {int(r["doc_id"]): int(r["score_e4"]) for r in top_rows}
-
-    conf = index.field_conf(field)
-    seps = tuple(conf.get("tokenize_on_chars") or ()) or DEFAULT_SEPARATORS
-    grouped = bool(conf.get("tokenizer_grouped", True))
-    _find, _sepset = batch_run_tokenizer(seps, grouped)
+    tokens = _field_tokens(index, field)
     termset = frozenset(terms)
-
-    def _snip(batches) -> "pd.DataFrame":
-        from bisect import bisect_right
-
-        for pdf in batches:
-            out = {"doc_id": [], "n_matched": [], "snippet": []}
-            for doc_id, txt in zip(pdf["doc_id"], pdf[field]):
-                if txt is None:
-                    continue
-                runs = _find(txt)
-                if len(runs) < 2:
-                    continue
-                toks = [t for t in runs if t[0] not in _sepset]
-                matches = [i for i, t in enumerate(toks) if t in termset]
-                if not matches:  # unreachable for a scored hit; belt+braces
-                    continue
-                best_nm, best_start = 0, 0
-                for pos_idx, p in enumerate(matches):
-                    nm = bisect_right(matches, p + W - 1) - pos_idx
-                    if nm > best_nm:  # strict: leftmost wins ties
-                        best_nm, best_start = nm, p
-                out["doc_id"].append(int(doc_id))
-                out["n_matched"].append(best_nm)
-                out["snippet"].append(" ".join(toks[best_start : best_start + W]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "n_matched": pd.Series(out["n_matched"], dtype="int64"),
-                    "snippet": pd.Series(out["snippet"], dtype="object"),
-                }
-            )
-
-    cand_rows = index.docstore().select("doc_id", field).where(
-        F.col("doc_id").isin(list(scores))
-    )
-    frags = cand_rows.mapInPandas(_snip, "doc_id long, n_matched long, snippet string")
-    totals = spark.createDataFrame(
-        sorted(scores.items()), "doc_id long, score_e4 long"
-    )
-    out = frags.join(F.broadcast(totals), "doc_id").select(
-        "doc_id", "score_e4", "n_matched", "snippet"
-    )
-    return out.orderBy(F.desc("score_e4"), F.desc("doc_id"))
+    rows = []
+    for doc_id, txt in _doc_texts(index, field, list(scores)):
+        toks = tokens(txt)
+        matches = [i for i, t in enumerate(toks) if t in termset]
+        if not matches:  # null/single-run text; unreachable for a scored hit
+            continue
+        best_nm, best_start = 0, 0
+        for pos_idx, p in enumerate(matches):
+            nm = bisect_right(matches, p + W - 1) - pos_idx
+            if nm > best_nm:  # strict: leftmost wins ties
+                best_nm, best_start = nm, p
+        snippet = " ".join(toks[best_start : best_start + W])
+        rows.append((doc_id, scores[doc_id], best_nm, snippet))
+    rows.sort(key=lambda r: (-r[1], -r[0]))
+    return _local_frame(spark, rows, schema)
 
 
 # ---------------------- significant terms over hits ----------------------
@@ -1325,89 +1320,53 @@ def bm25_sigterms(
     what surfaces "docs matching 'spark join' abnormally often say
     'shuffle'".
 
-    Scale shape: the sample fetch is a bounded collect + literal
-    ``doc_id IN`` docstore prune (k_sample rows, one Arrow counting
-    pass); the background join scans the dictionary ONCE with the
-    sample-vocabulary-sized foreground side broadcast; totals are two
-    single-row aggregates.  Nothing scales with corpus size except the
-    dictionary scan, which is a map-side broadcast join with no
-    shuffle."""
-    import pandas as pd
-
-    from veloci_spark.config import DEFAULT_SEPARATORS
-    from veloci_spark.tokenize import batch_run_tokenizer
+    Scale shape: the sample texts come into the driver through literal
+    ``doc_id IN`` docstore prunes of at most ``INLIST_SEMI_JOIN_CUTOVER``
+    ids each and are counted there with one Counter (k_sample docs, no
+    Python worker); the background join scans the dictionary ONCE with
+    the sample-vocabulary-sized foreground rows broadcast.  Nothing
+    scales with corpus size except the dictionary scan, which is a
+    map-side broadcast join with no shuffle."""
+    from collections import Counter
 
     spark = index.spark
     schema = "term string, fg long, bg long, jlh_e4 long"
     sample = bm25_topk(index, field, terms, k_sample).collect()
-    if not sample:
-        return spark.createDataFrame([], schema)
-    ids = [int(r["doc_id"]) for r in sample]
-
-    conf = index.field_conf(field)
-    seps = tuple(conf.get("tokenize_on_chars") or ()) or DEFAULT_SEPARATORS
-    grouped = bool(conf.get("tokenizer_grouped", True))
-    _find, _sepset = batch_run_tokenizer(seps, grouped)
-
-    def _count(batches) -> "pd.DataFrame":
-        from collections import Counter
-
-        for pdf in batches:
-            c: Counter = Counter()
-            for txt in pdf[field]:
-                if txt is None:
-                    continue
-                runs = _find(txt)
-                if len(runs) < 2:  # single-run texts emit no tokens
-                    continue
-                c.update(t for t in runs if t[0] not in _sepset)
-            yield pd.DataFrame(
-                {
-                    "term": pd.Series(list(c.keys()), dtype="object"),
-                    "fg": pd.Series(list(c.values()), dtype="int64"),
-                }
-            )
-
-    sample_rows = (
-        index.docstore().where(F.col("doc_id").isin(ids)).select(field)
+    tokens = _field_tokens(index, field)
+    counts: Counter = Counter()
+    for _, txt in _doc_texts(index, field, [int(r["doc_id"]) for r in sample]):
+        counts.update(tokens(txt))
+    fg_total = sum(counts.values())  # query terms included
+    if not fg_total:
+        return _local_frame(spark, [], schema)
+    # bg_total over the whole dictionary: an index constant (the
+    # bm25_stats class of statistic), memoized on the handle
+    bg_total = index.dictionary_total_occ(field)
+    excluded = set(terms)
+    fg = _local_frame(
+        spark,
+        [(t, n) for t, n in counts.items() if t not in excluded and n >= min_fg],
+        "term string, fg long",
     )
-    fg0 = (
-        sample_rows.mapInPandas(_count, "term string, fg long")
-        .groupBy("term")
-        .agg(F.sum("fg").alias("fg"))
-        .persist()
+    # dictionary scanned once, sample-vocabulary fg side broadcast
+    joined = index.dictionary(field).join(F.broadcast(fg), "term")
+    fgr = F.col("fg").cast("double") / F.lit(float(fg_total))
+    bgr = F.col("num_occurences").cast("double") / F.lit(float(bg_total))
+    jlh_e4 = F.floor(
+        (fgr - bgr) * (fgr / bgr) * F.lit(10000.0) + F.lit(0.5)
+    ).cast("long")
+    out_rows = (
+        joined.select(
+            "term",
+            "fg",
+            F.col("num_occurences").cast("long").alias("bg"),
+            jlh_e4.alias("jlh_e4"),
+        )
+        .orderBy(F.desc("jlh_e4"), F.asc("term"))
+        .limit(top_terms)
+        .collect()
     )
-    try:
-        fg_total = int(fg0.agg(F.sum("fg")).collect()[0][0] or 0)
-        if not fg_total:
-            return spark.createDataFrame([], schema)
-        # bg_total over the whole dictionary: an index constant (the
-        # bm25_stats class of statistic), memoized on the handle
-        bg_total = index.dictionary_total_occ(field)
-        fg = fg0.where(
-            (~F.col("term").isin(list(terms))) & (F.col("fg") >= int(min_fg))
-        )
-        # dictionary scanned once, sample-vocabulary fg side broadcast
-        joined = index.dictionary(field).join(F.broadcast(fg), "term")
-        fgr = F.col("fg").cast("double") / F.lit(float(fg_total))
-        bgr = F.col("num_occurences").cast("double") / F.lit(float(bg_total))
-        jlh_e4 = F.floor(
-            (fgr - bgr) * (fgr / bgr) * F.lit(10000.0) + F.lit(0.5)
-        ).cast("long")
-        out_rows = (
-            joined.select(
-                "term",
-                F.col("fg").cast("long").alias("fg"),
-                F.col("num_occurences").cast("long").alias("bg"),
-                jlh_e4.alias("jlh_e4"),
-            )
-            .orderBy(F.desc("jlh_e4"), F.asc("term"))
-            .limit(top_terms)
-            .collect()
-        )
-    finally:
-        fg0.unpersist()
-    return spark.createDataFrame(out_rows, schema)
+    return _local_frame(spark, out_rows, schema)
 
 
 # -------------------------- fuzzy BM25 matching --------------------------

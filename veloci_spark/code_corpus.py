@@ -1198,7 +1198,7 @@ ORDER BY score_e4 DESC, doc_id DESC"""
 def _q_bm25_snippet(spark, sf_dir):
     """OR top-k + leftmost maximal-occurrence 8-token fragment per hit;
     the fragment pass touches exactly k docs (literal IN docstore
-    prune + one Arrow batch)."""
+    fetch, windows picked in the driver)."""
     idx = code_index(spark, sf_dir)
     return bm25_snippet_topk(
         idx, "content", _SNIPPET_TERMS, _SNIPPET_K, window=_SNIPPET_W
